@@ -27,6 +27,13 @@ final case class Response(seqNo: Long, responseTag: Long, worker: Worker,
   * object: parse → route → dispatch on op → result. Process hops and
   * per-request shared memory disappear; Spark's scheduler replaces
   * thread-per-request dispatch, so there is no 100-request lifetime cap.
+  *
+  * Reads (ops 3/4) are size-gated. A version at or under Spark's
+  * broadcast threshold is collected by one job and traversed on the
+  * driver, as the reference's secondary server walks its in-memory
+  * adjacency matrix of at most 30×30 cells (`#define N 30`,
+  * `secondary_server.c:94-213`); a larger version runs the distributed
+  * operators. Both paths return the same rows in the same order.
   */
 final class GraphEngine(spark: SparkSession, val catalog: GraphCatalog) {
 
@@ -44,14 +51,9 @@ final class GraphEngine(spark: SparkSession, val catalog: GraphCatalog) {
       case (Op.ModifyGraph, GraphPayload(edges)) =>
         catalog.modify(req.graphName, edges)
         Response(req.seqNo, req.responseTag, worker, "File successfully modified", None)
-      case (Op.DfsLeaves, StartVertex(v)) =>
-        val edges = loadValidated(req.graphName, v)
+      case (op @ (Op.DfsLeaves | Op.BfsLevels), StartVertex(v)) =>
         Response(req.seqNo, req.responseTag, worker, "ok",
-          Some(GraphOps.dfsLeaves(edges, v)))
-      case (Op.BfsLevels, StartVertex(v)) =>
-        val edges = loadValidated(req.graphName, v)
-        Response(req.seqNo, req.responseTag, worker, "ok",
-          Some(GraphOps.bfsLevels(edges, v)))
+          Some(traverse(req.graphName, op == Op.BfsLevels, v)))
       case (op, p) =>
         throw new IllegalArgumentException(
           s"op ${op.code} cannot take payload ${p.getClass.getSimpleName}")
@@ -62,14 +64,29 @@ final class GraphEngine(spark: SparkSession, val catalog: GraphCatalog) {
   def executeLine(line: String, payload: Payload): Response =
     execute(RequestParser.parse(line), payload)
 
-  private def loadValidated(name: String, start: Long): DataFrame = {
+  /** Ops 3/4 on the latest version of `name`. The planner's size estimate
+    * of the version comes from the file listing (no Spark job); at or
+    * under `spark.sql.autoBroadcastJoinThreshold`, Spark's own rule for
+    * "small enough to ship whole", the version is collected once and
+    * traversed on the driver. Above it, or with it at -1, the distributed
+    * operator runs.
+    */
+  private def traverse(name: String, bfs: Boolean, start: Long): DataFrame = {
     val edges = catalog.load(name) // throws GraphNotFound: add-before-read rule
-    val present = edges.filter(col("src") === start || col("dst") === start).limit(1)
-    if (start < 1 || present.isEmpty)
-      throw new IllegalArgumentException(
-        s"start vertex $start not in graph '$name' (reference would index adj[${start - 1}])")
-    edges
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 && edges.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold) {
+      val g = GraphOps.LocalGraph.collect(edges)
+      if (start < 1 || !g.contains(start)) throw badStart(name, start)
+      if (bfs) GraphOps.bfsLevelsLocal(g, start) else GraphOps.dfsLeavesLocal(g, start)
+    } else {
+      val present = edges.filter(col("src") === start || col("dst") === start).limit(1)
+      if (start < 1 || present.isEmpty) throw badStart(name, start)
+      if (bfs) GraphOps.bfsLevels(edges, start) else GraphOps.dfsLeaves(edges, start)
+    }
   }
+
+  private def badStart(name: String, start: Long) = new IllegalArgumentException(
+    s"start vertex $start not in graph '$name' (reference would index adj[${start - 1}])")
 }
 
 /** Replayer for reference-style interactive session scripts (`inp.txt`):

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 final class GraphNotFoundException private (message: String, marker: Boolean)
   extends IllegalStateException(message) {
@@ -95,14 +96,18 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     val next = versionsOf(name).lastOption.map(_.version + 1).getOrElse(1L)
     val prefix = if (delta) "d" else "v"
     val target = new Path(graphDir(name), f"$prefix$next%06d")
+    // one fixed schema for every version: loads pass it to the reader
+    // and so run no footer-inference job
+    val typed = edges.select(col("src").cast("bigint").as("src"),
+      col("dst").cast("bigint").as("dst"))
     buckets match {
       case Some(n) =>
-        edges.select("src", "dst").write
+        typed.write
           .option("path", target.toString)
           .bucketBy(n, "src").sortBy("src")
           .format("parquet").saveAsTable(tableName(name, next))
       case None =>
-        edges.select("src", "dst").write.mode("errorifexists")
+        typed.write.mode("errorifexists")
           .parquet(target.toString)
     }
   }
@@ -204,7 +209,7 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     def one(e: VersionEntry): DataFrame = {
       val t = tableName(name, e.version)
       if (buckets.isDefined && spark.catalog.tableExists(t)) spark.table(t)
-      else spark.read.parquet(e.path.toString)
+      else spark.read.schema("src BIGINT, dst BIGINT").parquet(e.path.toString)
     }
     chain.map(one).reduceLeft(_ unionAll _)
   }

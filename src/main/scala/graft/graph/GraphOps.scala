@@ -2,10 +2,12 @@ package graft.graph
 
 import org.apache.spark.graphx.{Edge, EdgeDirection, Graph, Pregel, VertexId}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Graph operators with the reference's observable semantics (SURVEY.md §2
   * Table A), re-expressed as distributed dataflow.
@@ -99,6 +101,9 @@ object GraphOps {
     }
   }
 
+  /** Default level cap of the BFS operators, distributed and driver-side. */
+  val MaxBfsLevels = 1000
+
   /** BFS levels — reference op 4 (`secondary_server.c:94-140`).
     *
     * Level-synchronous frontier expansion as an iterative DataFrame loop:
@@ -119,7 +124,7 @@ object GraphOps {
     * the canonical form of the reference's "order within a level is
     * unspecified" contract (`Sample IO for DFS_BFS.docx`).
     */
-  def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = 1000): DataFrame = {
+  def bfsLevels(edges: DataFrame, start: Long, maxLevels: Int = MaxBfsLevels): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     ownedGraphResult(spark) {
@@ -165,7 +170,7 @@ object GraphOps {
     * Output: `(start, vertex, level)` ordered.
     */
   def bfsLevelsMulti(edges: DataFrame, starts: Seq[Long],
-                     maxLevels: Int = 1000): DataFrame = {
+                     maxLevels: Int = MaxBfsLevels): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     ownedGraphResult(spark) {
@@ -451,6 +456,144 @@ object GraphOps {
               (col("degree").isNull && col("vertex") === start))
       .select("vertex")
       .orderBy("vertex")
+  }
+
+  /** An edge table collected to the driver by ONE Spark job, in CSR form
+    * over primitive arrays: the input of [[bfsLevelsLocal]] and
+    * [[dfsLeavesLocal]], the driver-side twins of [[bfsLevels]] and
+    * [[dfsLeaves]] for graphs at the reference's own scale. Its secondary
+    * server walks an in-memory adjacency matrix of at most 30×30 cells
+    * (`#define N 30`, `secondary_server.c:94-213`), where the distributed
+    * traversal pays two Spark jobs per level for a few dozen edges.
+    * Callers gate on size; nothing here bounds driver memory.
+    *
+    * Null endpoints keep the distributed operators' join semantics: a
+    * null `src` is never expanded; a null `dst` IS reached (the frontier
+    * join emits it and the anti-join cannot remove it) and counts as one
+    * distinct neighbour in the symmetrized degree.
+    */
+  final class LocalGraph private (
+      private[GraphOps] val spark: SparkSession,
+      /** sorted distinct non-null endpoints; vertices are indices into it */
+      private[GraphOps] val ids: Array[Long],
+      /** out-edges of vertex i: `outDst(outStart(i) until outStart(i + 1))` */
+      private[GraphOps] val outStart: Array[Int],
+      private[GraphOps] val outDst: Array[Int],
+      /** vertex i has an out-edge to a null `dst` */
+      private[GraphOps] val nullOut: Array[Boolean],
+      /** distinct neighbours in the symmetrized edge set, null counted once */
+      private[GraphOps] val degree: Array[Int]) {
+    private[GraphOps] def index(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    /** `v` is an endpoint of some edge (the engine's start-vertex check). */
+    def contains(v: Long): Boolean = index(v) >= 0
+  }
+
+  object LocalGraph {
+    def collect(edges: DataFrame): LocalGraph = {
+      val rows = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+      val ends = Array.newBuilder[Long]
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) ends += r.getLong(0)
+        if (!r.isNullAt(1)) ends += r.getLong(1)
+      }
+      val all = ends.result()
+      java.util.Arrays.sort(all)
+      var k = 0 // distinct prefix of the sorted endpoints, compacted in place
+      for (v <- all if k == 0 || all(k - 1) != v) { all(k) = v; k += 1 }
+      val ids = java.util.Arrays.copyOf(all, k)
+      def idx(r: Row, c: Int): Int =
+        if (r.isNullAt(c)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(c))
+      val si = rows.map(idx(_, 0))
+      val di = rows.map(idx(_, 1))
+      val outStart = new Array[Int](k + 1)
+      val nullOut = new Array[Boolean](k)
+      val nullNbr = new Array[Boolean](k)
+      // symmetrized pairs as one sortable key a·k + b (k < 2^31, so exact)
+      val pairs = Array.newBuilder[Long]
+      for (i <- rows.indices) {
+        val s = si(i)
+        val d = di(i)
+        if (s >= 0 && d >= 0) {
+          outStart(s + 1) += 1
+          pairs += s.toLong * k + d
+          pairs += d.toLong * k + s
+        } else if (s >= 0) { nullOut(s) = true; nullNbr(s) = true }
+        else if (d >= 0) nullNbr(d) = true
+      }
+      for (v <- 0 until k) outStart(v + 1) += outStart(v)
+      val outDst = new Array[Int](outStart(k))
+      val fill = outStart.clone()
+      for (i <- rows.indices if si(i) >= 0 && di(i) >= 0) {
+        outDst(fill(si(i))) = di(i)
+        fill(si(i)) += 1
+      }
+      val keys = pairs.result()
+      java.util.Arrays.sort(keys)
+      val degree = nullNbr.map(b => if (b) 1 else 0)
+      for (j <- keys.indices if j == 0 || keys(j - 1) != keys(j))
+        degree((keys(j) / k).toInt) += 1
+      new LocalGraph(edges.sparkSession, ids, outStart, outDst, nullOut, degree)
+    }
+  }
+
+  /** [[bfsLevels]]'s rows, schema and order, computed on the driver from a
+    * [[LocalGraph]]: first-discovery levels over out-edges, at most
+    * `maxLevels` levels. The result is a local relation: collecting it
+    * runs no Spark job.
+    */
+  def bfsLevelsLocal(g: LocalGraph, start: Long, maxLevels: Int = MaxBfsLevels): DataFrame =
+    g.spark.createDataFrame(bfsLocalRows(g, start, maxLevels).asJava, BfsLocalSchema)
+
+  /** [[dfsLeaves]]'s rows, schema and order on the driver: reachable
+    * vertices of symmetrized degree 1 other than the start, or the start
+    * itself when it is an endpoint of no edge.
+    */
+  def dfsLeavesLocal(g: LocalGraph, start: Long): DataFrame = {
+    val leaves = bfsLocalRows(g, start, MaxBfsLevels).filterNot(_.isNullAt(0)).map(_.getLong(0))
+      .filter { v =>
+        val i = g.index(v)
+        if (i >= 0) g.degree(i) == 1 && v != start else v == start
+      }.sorted
+    g.spark.createDataFrame(leaves.map(v => Row(v)).asJava, DfsLocalSchema)
+  }
+
+  private val BfsLocalSchema = StructType(Seq(
+    StructField("vertex", LongType, nullable = true),
+    StructField("level", LongType, nullable = false)))
+  private val DfsLocalSchema = StructType(BfsLocalSchema.take(1))
+
+  /** `(vertex, level)` rows in (level, vertex) order. A null `dst` reached
+    * at a level is a null vertex row, first within it as Spark sorts
+    * nulls first.
+    */
+  private def bfsLocalRows(g: LocalGraph, start: Long, maxLevels: Int): Seq[Row] = {
+    val out = Seq.newBuilder[Row]
+    out += Row(start, 0L)
+    val seen = new Array[Boolean](g.ids.length)
+    val s = g.index(start)
+    var frontier = if (s >= 0) { seen(s) = true; Array(s) } else Array.emptyIntArray
+    var level = 0L
+    var done = false
+    while (!done && level < maxLevels) {
+      val next = Array.newBuilder[Int]
+      var reachesNull = false
+      for (u <- frontier) {
+        reachesNull ||= g.nullOut(u)
+        for (j <- g.outStart(u) until g.outStart(u + 1)) {
+          val w = g.outDst(j)
+          if (!seen(w)) { seen(w) = true; next += w }
+        }
+      }
+      frontier = next.result()
+      if (frontier.isEmpty && !reachesNull) done = true
+      else {
+        level += 1
+        if (reachesNull) out += Row(null, level)
+        java.util.Arrays.sort(frontier) // index order is id order
+        frontier.foreach(w => out += Row(g.ids(w), level))
+      }
+    }
+    out.result()
   }
 
   /** DFS-leaves via a genuine Pregel traversal (SURVEY.md A6's promised

@@ -62,6 +62,10 @@ object Bootstrap {
     */
   def poissonCiMean(df: DataFrame, b: Int = 64,
                     loRank: Int = 2, hiRank: Int = 63): DataFrame = {
+    // out-of-range ranks would match no replica and yield NULL bounds
+    require(1 <= loRank && loRank <= hiRank && hiRank <= b,
+      s"poissonCiMean: need 1 <= loRank <= hiRank <= b, got loRank=$loRank, " +
+        s"hiRank=$hiRank, b=$b")
     import graft.functions.PortableHash
     // per-replica 2-universal coefficients in [1, P): derived from md5 of
     // tagged replica indices, so the oracle replays the derivation in SQL

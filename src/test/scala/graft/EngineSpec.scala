@@ -240,4 +240,37 @@ class EngineSpec extends AnyFunSuite {
     val extra = (sc.getPersistentRDDs.keySet -- before).toSeq.sorted
     assert(extra.size <= 8, s"concurrent sweep leaked intermediates: $extra")
   }
+
+  test("small-graph reads: one Spark job on the driver path; threshold -1 takes the distributed path with the same rows and errors") {
+    val engine = freshEngine()
+    engine.execute(GraphRequest(1, Op.AddGraph, "GS.txt"),
+      GraphPayload(undirected((1, 2), (2, 3), (2, 4), (4, 5))))
+    def read(seq: Long, op: Op, v: Long) =
+      engine.execute(GraphRequest(seq, op, "GS.txt"), StartVertex(v)).result.get.collect().toSeq
+    var bfs, dfs = Seq.empty[org.apache.spark.sql.Row]
+    assert(jobsIn("engine-bfs-local") { bfs = read(2, Op.BfsLevels, 2) } == 1)
+    assert(jobsIn("engine-dfs-local") { dfs = read(3, Op.DfsLeaves, 2) } == 1)
+    assert(bfs.map(r => (r.getLong(0), r.getLong(1))) ==
+      Seq((2L, 0L), (1L, 1L), (3L, 1L), (4L, 1L), (5L, 2L)))
+    assert(dfs.map(_.getLong(0)) == Seq(1L, 3L, 5L))
+    // start vertex 0, an absent vertex, a missing graph
+    val bad = Seq((Op.BfsLevels, "GS.txt", 0L), (Op.DfsLeaves, "GS.txt", 0L),
+      (Op.BfsLevels, "GS.txt", 9L), (Op.DfsLeaves, "GS.txt", 9L), (Op.DfsLeaves, "GX.txt", 1L))
+    def failures() = bad.map { case (op, name, v) =>
+      val e = scala.util.Try(engine.execute(GraphRequest(6, op, name), StartVertex(v))).failed.get
+      (e.getClass, e.getMessage)
+    }
+    val localFailures = failures()
+    assert(localFailures.map(_._1) ==
+      Seq.fill(4)(classOf[IllegalArgumentException]) :+ classOf[GraphNotFoundException])
+    assert(localFailures(2)._2 == "start vertex 9 not in graph 'GS.txt' (reference would index adj[8])")
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      assert(jobsIn("engine-bfs-distributed") { assert(read(4, Op.BfsLevels, 2) == bfs) } > 1)
+      assert(read(5, Op.DfsLeaves, 2) == dfs)
+      assert(failures() == localFailures)
+    } finally spark.conf.set(key, prev)
+  }
 }

@@ -270,4 +270,67 @@ class GenerativePropertySpec extends AnyFunSuite {
       }
     }, "census vs brute force")
   }
+
+  /** Edge rows over vertices 1..n from one seed: a random recursive tree,
+    * sometimes cut into a forest, plus chords (cycles), self-loops,
+    * duplicate rows and edges stored in one direction only.
+    */
+  private def messyGraph(rng: scala.util.Random): (Int, Seq[(Long, Long)]) = {
+    val n = 1 + rng.nextInt(14)
+    def v() = (1 + rng.nextInt(n)).toLong
+    val tree = (2 to n).map(i => ((1 + rng.nextInt(i - 1)).toLong, i.toLong))
+    val kept = if (rng.nextBoolean()) tree else tree.filter(_ => rng.nextInt(4) > 0)
+    val chords = Seq.fill(rng.nextInt(4))((v(), v()))
+    val loops = Seq.fill(rng.nextInt(2)) { val x = v(); (x, x) }
+    val rows = (kept ++ chords ++ loops).flatMap { case (a, b) =>
+      if (rng.nextInt(5) == 0) Seq((a, b)) else Seq((a, b), (b, a))
+    }
+    val dups = if (rows.isEmpty) Nil else Seq.fill(rng.nextInt(3))(rows(rng.nextInt(rows.length)))
+    (n, rows ++ dups)
+  }
+
+  /** The driver-side traversal returns the distributed operator's rows,
+    * column names and types, and order from `start`. (Nullability is not
+    * compared: the distributed result's follows its plan, e.g. a level-0
+    * only BFS is non-nullable.)
+    */
+  private def traversalsAgree(edges: org.apache.spark.sql.DataFrame, start: Long): Boolean = {
+    val g = graph.GraphOps.LocalGraph.collect(edges)
+    def same(local: org.apache.spark.sql.DataFrame, dist: org.apache.spark.sql.DataFrame) =
+      local.dtypes.toSeq == dist.dtypes.toSeq && local.collect().toSeq == dist.collect().toSeq
+    same(graph.GraphOps.bfsLevelsLocal(g, start), graph.GraphOps.bfsLevels(edges, start)) &&
+      same(graph.GraphOps.dfsLeavesLocal(g, start), graph.GraphOps.dfsLeaves(edges, start))
+  }
+
+  test("property: driver-side BFS/DFS equal bfsLevels/dfsLeaves row for row") {
+    assertHolds(Prop.forAll(Gen.long, Gen.chooseNum(1, 4)) { (seed, nPart) =>
+      val rng = new scala.util.Random(seed)
+      val (n, rows) = messyGraph(rng)
+      // start n + 1 is an endpoint of no edge: the isolated-start case
+      traversalsAgree(rows.toDF("src", "dst").repartition(nPart), 1L + rng.nextInt(n + 1))
+    }, "driver traversal vs distributed")
+  }
+
+  test("driver-side BFS/DFS equal the distributed operators on null endpoints, self-loop starts and the level cap") {
+    val nulls = Seq[(Option[Long], Option[Long])]((Some(1L), Some(2L)), (Some(2L), Some(1L)),
+      (Some(2L), None), (None, Some(3L)), (Some(3L), Some(2L)), (None, None), (Some(4L), None))
+      .toDF("src", "dst")
+    for (s <- 1L to 5L) assert(traversalsAgree(nulls, s), s"null endpoints from $s")
+    val selfLoop = Seq((1L, 1L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
+    assert(traversalsAgree(selfLoop, 1L) && traversalsAgree(selfLoop, 2L))
+    // 1,200-vertex path. The distributed traversal's visited-set plan grows
+    // with depth, so 1,000 of its levels take minutes: parity is checked at
+    // a 20-level cap, and the 1,000-level default (one constant for both)
+    // on the driver path alone
+    val path = undirected((1L until 1200L).map(i => (i, i + 1)): _*)
+    val g = graph.GraphOps.LocalGraph.collect(path)
+    assert(graph.GraphOps.bfsLevelsLocal(g, 1L, maxLevels = 20).collect().toSeq ==
+      graph.GraphOps.bfsLevels(path, 1L, maxLevels = 20).collect().toSeq)
+    assert(graph.GraphOps.bfsLevelsLocal(g, 1L).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq == (0L to 1000L).map(l => (l + 1, l)))
+    def leavesFrom(s: Long) = graph.GraphOps.dfsLeavesLocal(g, s).collect().map(_.getLong(0)).toSeq
+    // vertex 1,200 is exactly 1,000 hops from 200 and one hop too far from 199
+    assert(leavesFrom(200L) == Seq(1L, 1200L) && leavesFrom(199L) == Seq(1L))
+    assert(leavesFrom(1L).isEmpty)
+  }
 }

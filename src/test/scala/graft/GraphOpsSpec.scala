@@ -138,25 +138,8 @@ class GraphOpsSpec extends AnyFunSuite {
     // iteration count is bounded by the batch's max eccentricity, not by
     // the number of starts
     val edges = docxG2 // eccentricity from 3 is 5 (the deepest of 1..4)
-    def jobsOf(tag: String, starts: Seq[Long]): Int = {
-      val sc = spark.sparkContext
-      sc.setJobGroup(tag, tag, interruptOnCancel = false)
-      try GraphOps.bfsLevelsMulti(edges, starts).collect()
-      finally sc.clearJobGroup()
-      // the status store is listener-fed (async) — require a nonzero count
-      // that stays stable across THREE consecutive 300 ms reads (a single
-      // quiet interval can race a stalled listener bus), bounded at 15 s
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var stable = 0
-      var last = -1
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val n = sc.statusTracker.getJobIdsForGroup(tag).length
-        if (n > 0 && n == last) stable += 1 else stable = 0
-        last = n
-        Thread.sleep(300)
-      }
-      last
-    }
+    def jobsOf(tag: String, starts: Seq[Long]): Int =
+      jobsIn(tag)(GraphOps.bfsLevelsMulti(edges, starts).collect())
     val deepest = jobsOf("bfs-one", Seq(3L))
     val batch = jobsOf("bfs-four", Seq(1L, 2L, 3L, 4L))
     assert(batch <= deepest + 1,

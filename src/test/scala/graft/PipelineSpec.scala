@@ -1050,4 +1050,17 @@ class PipelineSpec extends AnyFunSuite {
     // being equal would make the test vacuous)
     assert(funnel("1_corpus") > funnel("5_decontaminated"))
   }
+
+  test("poissonCiMean rejects ranks outside 1 <= loRank <= hiRank <= b") {
+    import graft.pipeline.Bootstrap
+    // enough rows that no replica draws all-zero weights
+    val df = (1L to 200L).map(i => (i, 100L * i)).toDF("id", "cents")
+    for ((b, lo, hi) <- Seq((8, 0, 7), (8, 2, 9), (8, 5, 4))) {
+      val e = intercept[IllegalArgumentException](Bootstrap.poissonCiMean(df, b, lo, hi))
+      assert(e.getMessage.contains(s"got loRank=$lo, hiRank=$hi, b=$b"))
+    }
+    // the edge of the valid range still yields both bounds
+    val r = Bootstrap.poissonCiMean(df, b = 8, loRank = 1, hiRank = 8).collect().head
+    assert(!r.isNullAt(2) && !r.isNullAt(3))
+  }
 }
