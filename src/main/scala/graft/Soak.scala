@@ -2,30 +2,8 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** sf1 scale soak: replicate the sf0.1 testdata 10× into DISJOINT key
-  * spaces under a scratch dir, then time the slowest headline queries at
-  * both scales in one session — evidence that fixpoint round counts and
-  * candidate-join caps scale as designed (a 10× input should cost ≈ 10×,
-  * never blow up). Usage: `sbt "runMain graft.Soak [sf0.1Dir] [workDir]"`;
-  * writes `SOAK_sf1.json` (override with SPARK_GRAFT_SOAK_OUT).
-  *
-  * What "×10" must MEAN per table — naive row duplication would change
-  * the workload's shape, not just its size:
-  * - Relational keys offset by copy × 4e9: each copy is a referentially
-  *   intact replica in its own id range, so joins and derived graphs
-  *   become 10 disjoint copies — same diameter/depth (same number of
-  *   fixpoint rounds), 10× the width per round. The stride clears every
-  *   vertex-namespace base in [[graft.graph.DerivedGraphs]].
-  * - documents: every token is salted with the copy tag, so cross-copy
-  *   text similarity is ZERO and near-dup candidate joins scale linearly.
-  *   Exact text copies would instead multiply near-dup PAIRS
-  *   quadratically in the copy count — a semantically different (and
-  *   unrepresentative) workload.
-  * - events: ts shifted one year per copy, so the time-proximity interval
-  *   join finds no cross-copy pairs (it matches on time alone); ids
-  *   offset like relational keys.
-  */
 /** Census mass-vs-time adjudication (round-12 task #4): the K4 census
   * soaks super-2× at 10× data, and the docstring claims the
   * superlinearity is output MASS (C(s,4) growth on dense baskets), not
@@ -76,190 +54,29 @@ object CensusMass {
   }
 }
 
-/** 3×-length curation-twin replay (r17 verdict #3 done-criterion): run
-  * `curationReplayBatch` at 12 micro-batches (the bench/oracle config
-  * runs 4) over the same corpus and print every batch's wall time and
-  * tag. Under the r18 size-tiered store maintenance, each "compact"
-  * batch's merge cost must stay BOUNDED across the stream — a level-0
-  * merge always touches fanIn(4) single-batch files, regardless of how
-  * much store has accumulated — where the r17 every-4-batches wholesale
-  * rewrite grew with the corpus (O(B·store) total). The batch count is
-  * the input partition count, so 12 batches ≈ 1/3-sized deltas: the
-  * per-batch append medians shrink accordingly while compact-batch
-  * costs stay flat from first to last — the signature the old policy
-  * cannot produce. Usage:
-  * `sbt "runMain graft.CurationSoak [sfDir]"` → one JSON line (and
-  * SPARK_GRAFT_CURSOAK_OUT, default /tmp/curation_soak.json).
+/** sf1 scale soak: replicate the sf0.1 testdata 10× into DISJOINT key
+  * spaces under a scratch dir, then time the slowest headline queries at
+  * both scales in one session — evidence that fixpoint round counts and
+  * candidate-join caps scale as designed (a 10× input should cost ≈ 10×,
+  * never blow up). Usage: `sbt "runMain graft.Soak [sf0.1Dir] [workDir]"`;
+  * writes `SOAK_sf1.json` (override with SPARK_GRAFT_SOAK_OUT).
+  *
+  * What "×10" must MEAN per table — naive row duplication would change
+  * the workload's shape, not just its size:
+  * - Relational keys offset by copy × 4e9: each copy is a referentially
+  *   intact replica in its own id range, so joins and derived graphs
+  *   become 10 disjoint copies — same diameter/depth (same number of
+  *   fixpoint rounds), 10× the width per round. The stride clears every
+  *   vertex-namespace base in [[graft.graph.DerivedGraphs]].
+  * - documents: every token is salted with the copy tag, so cross-copy
+  *   text similarity is ZERO and near-dup candidate joins scale linearly.
+  *   Exact text copies would instead multiply near-dup PAIRS
+  *   quadratically in the copy count — a semantically different (and
+  *   unrepresentative) workload.
+  * - events: ts shifted one year per copy, so the time-proximity interval
+  *   join finds no cross-copy pairs (it matches on time alone); ids
+  *   offset like relational keys.
   */
-object CurationSoak {
-  def main(args: Array[String]): Unit = {
-    val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val batches = sys.env.getOrElse("SPARK_GRAFT_CURSOAK_BATCHES", "12").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // probe-gated basis (r18 verdict #2): the artifact carries its own
-    // contention evidence and self-rejects (rc 3) outside the idle band
-    val probeScratch = graft.TmpDirs.create("graft_cursoak_probe_")
-    val pre = NoiseProbe.full(probeScratch)
-    graft.streaming.StreamOps.drainBatchRecords()
-    // per-batch pruned-scan bytes on the bucketed store probes (r18
-    // verdict #5 witness: with corpus-scaled nBuckets, pruned bytes per
-    // batch must grow sublinearly vs the corpus at 10×)
-    graft.streaming.StreamOps.scanProbeEnabled = true
-    graft.streaming.StreamOps.drainScanBytes()
-    val t0 = System.nanoTime()
-    val n = graft.streaming.StreamOps.curationReplayBatch(
-      spark, s"$srcDir/documents.parquet", inputPartitions = batches).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    val recs = graft.streaming.StreamOps.drainBatchRecords()
-    val scans = graft.streaming.StreamOps.drainScanBytes()
-    graft.streaming.StreamOps.scanProbeEnabled = false
-    val post = NoiseProbe.full(probeScratch)
-    val noiseOk = pre.withinIdleBand && post.withinIdleBand
-    val per = recs.map { case (d, k) => f"""{"sec":$d%.3f,"tag":"$k"}""" }
-      .mkString("[", ",", "]")
-    val compacts = recs.collect { case (d, "compact") => d }
-    val spread =
-      if (compacts.size >= 2) compacts.max / compacts.min else 1.0
-    // per-store scan-probe summary: median/max pruned bytes per batch +
-    // the store's final total — the sublinearity witness reads
-    // median_pruned against the corpus factor across two runs
-    val scanJson = scans.groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (store, xs) =>
-        val pruned = xs.map(_._2).sorted
-        val medP = if (pruned.isEmpty) 0L else pruned(pruned.size / 2)
-        s""""$store":{"probes":${xs.size},"median_pruned_bytes":$medP,""" +
-          s""""max_pruned_bytes":${pruned.lastOption.getOrElse(0L)},""" +
-          s""""final_total_bytes":${xs.last._3}}"""
-    }.mkString("{", ",", "}")
-    val json =
-      f"""{"src":"$srcDir","batches_requested":$batches,""" +
-        f""""batches_ran":${recs.size},"rows":$n,"wall_sec":$wall%.1f,""" +
-        f""""per_batch":$per,"n_compact":${compacts.size},""" +
-        f""""compact_max_over_min":$spread%.2f,"scan_probe":$scanJson,""" +
-        f""""noise_control":{"pre":${pre.json},"post":${post.json}},""" +
-        f""""noise_ok":$noiseOk}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_CURSOAK_OUT", "/tmp/curation_soak.json")),
-      json)
-    spark.stop()
-    if (!noiseOk) {
-      System.err.println("[cursoak] NOISE GATE: probes left the idle band " +
-        "— basis rejected (rc 3); re-run in an idle window")
-      sys.exit(3)
-    }
-  }
-}
-
-/** Same-session ON/OFF A/B for the tiered store maintenance (r18 verdict
-  * #1): the four serve twins whose re-based r18 sequential legs rose
-  * 1.5–3.3× after gaining per-batch `tieredCompactStore` calls are each
-  * run with maintenance at the shipped fan-in (4) and DISABLED (fan-in 0
-  * via the `graft.compactFanIn` system property — same knob as env
-  * GRAFT_COMPACT_FANIN), reps interleaved ABAB so a host-noise window
-  * inflates both arms alike instead of one. Per-arm medians plus the
-  * per-batch tag medians (append vs compact) price the maintenance:
-  * the ON−OFF delta is the structural cost of the policy, separated
-  * from whatever the box is doing. Pre/post [[NoiseProbe]] runs label
-  * the window. Usage: `sbt "runMain graft.MaintenanceAB [sfDir]"` →
-  * one JSON line (and SPARK_GRAFT_AB_OUT, default /tmp/maintenance_ab
-  * .json).
-  */
-object MaintenanceAB {
-  val Twins: Seq[String] = Seq(
-    "stream_quantiles_sampled", "stream_bm25_serving",
-    "stream_embedding_topk", "stream_ivfadc_topk")
-
-  def main(args: Array[String]): Unit = {
-    val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_AB_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val scratch = graft.TmpDirs.create("graft_ab_probe_")
-    val pre = NoiseProbe.full(scratch)
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted; (s(s.size / 2) + s((s.size - 1) / 2)) / 2
-    }
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    val rows = Twins.map { name =>
-      val fn = SparkEntry.queries(name)
-      // one untimed warm rep at the shipped config (the bench discipline
-      // for stream_* heavies: drop the state-store/codegen setup rep)
-      sys.props.put("graft.compactFanIn", "4")
-      try { fn(spark, srcDir).count(); () } catch { case _: Throwable => () }
-      graft.streaming.StreamOps.drainBatchRecords()
-      val on = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val off = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val onTags = scala.collection.mutable.ArrayBuffer.empty[(Double, String)]
-      val offTags = scala.collection.mutable.ArrayBuffer.empty[(Double, String)]
-      (1 to reps).foreach { _ =>
-        Seq(("4", on, onTags), ("0", off, offTags)).foreach {
-          case (fi, arm, tags) =>
-            sys.props.put("graft.compactFanIn", fi)
-            isolate()
-            graft.streaming.StreamOps.drainBatchRecords()
-            val t0 = System.nanoTime()
-            fn(spark, srcDir).count()
-            arm += (System.nanoTime() - t0) / 1e9
-            tags ++= graft.streaming.StreamOps.drainBatchRecords()
-        }
-      }
-      sys.props.put("graft.compactFanIn", "4")
-      val onMed = med(on.toSeq); val offMed = med(off.toSeq)
-      System.err.println(f"[ab] $name%-26s on=$onMed%6.2fs off=$offMed%6.2fs " +
-        f"delta=${onMed - offMed}%+5.2fs")
-      def tagMed(ts: Seq[(Double, String)], k: String): String = {
-        val ds = ts.collect { case (d, `k`) => d }
-        if (ds.isEmpty) "null" else f"${med(ds)}%.3f"
-      }
-      (name,
-        f""""$name":{"on_median_sec":$onMed%.3f,"off_median_sec":$offMed%.3f,""" +
-        f""""delta_sec":${onMed - offMed}%.3f,""" +
-        f""""on_reps":${on.map(t => f"$t%.2f").mkString("[", ",", "]")},""" +
-        f""""off_reps":${off.map(t => f"$t%.2f").mkString("[", ",", "]")},""" +
-        s""""on_append_batch_median_sec":${tagMed(onTags.toSeq, "append")},""" +
-        s""""on_compact_batch_median_sec":${tagMed(onTags.toSeq, "compact")},""" +
-        s""""off_append_batch_median_sec":${tagMed(offTags.toSeq, "append")}}""")
-    }
-    val post = NoiseProbe.full(scratch)
-    val noiseOk = pre.withinIdleBand && post.withinIdleBand
-    val json =
-      s"""{"src":"$srcDir","reps_per_arm":$reps,"interleaved":"ABAB",""" +
-        s""""queries":${rows.map(_._2).mkString("{", ",", "}")},""" +
-        s""""noise_control":{"pre":${pre.json},"post":${post.json}},""" +
-        s""""noise_ok":$noiseOk}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_AB_OUT", "/tmp/maintenance_ab.json")), json)
-    spark.stop()
-    if (!noiseOk) {
-      System.err.println("[ab] NOISE GATE: probes left the idle band — " +
-        "basis is adjudication-only; re-run in an idle window")
-      sys.exit(3)
-    }
-  }
-}
-
 object Soak {
 
   /** The slowest queries of the recent benches: the round-6 list, round
@@ -404,7 +221,7 @@ object Soak {
       "tier being merged, never the accumulated store; the r17 policy's " +
       "every-4th-batch wholesale fold grew with the corpus, 6.7s -> " +
       "11.1s at 10x, the O(B*store) class r17 verdict #3 flagged); " +
-      "graft.CurationSoak's 12-batch 3x-length replay is the bounded " +
+      "a 12-batch 3x-length curation replay was the bounded " +
       "witness (flat compact-batch costs first->last, " +
       "SOAK_ADJUDICATION round18); the append-class batches remain the " +
       "|delta|-scaled claim's witness - keeper/label upserts are " +
@@ -481,6 +298,10 @@ object Soak {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // static conf: every session, including the `newSession()` ones the
+      // stream twins run in, gets its own listener instance
+      .config("spark.sql.streaming.streamingQueryListeners",
+        classOf[BatchDurationListener].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -566,74 +387,33 @@ object Soak {
     // Per-batch cost record for the maintain twins (r14 verdict #7): a
     // 10× replay processes 10× total delta by construction, so the
     // full-replay ratio alone cannot separate |Δ|-scaled per-batch cost
-    // (the twins' claim) from accumulated-graph cost. The replays record
-    // each micro-batch's wall time; the soak drains them per timing and
-    // emits, next to the replay ratio, (a) the per-batch median at both
-    // scales and (b) the first-vs-last batch medians WITHIN a replay —
-    // flat first→last while the accumulated graph grows 4× across the
-    // replay is the |Δ|-scaling witness.
-    def perBatchStats(recs: Seq[(Double, String)]): Option[String] = {
-      if (recs.isEmpty) None
-      else if (recs.size % reps != 0) {
+    // (the twins' claim) from accumulated-graph cost. Each micro-batch's
+    // `batchDuration` comes from [[BatchDurationListener]], drained per
+    // timing; next to the replay ratio the soak emits (a) the per-batch
+    // median at both scales and (b) the first-vs-last batch medians
+    // WITHIN a replay — flat first→last while the accumulated graph
+    // grows 4× across the replay is the |Δ|-scaling witness.
+    def perBatchStats(durations: Seq[Double]): Option[String] = {
+      if (durations.isEmpty) None
+      else if (durations.size % reps != 0) {
         // replay boundaries are inferred by dividing the drained records
         // into `reps` equal groups; a retried/extra micro-batch would
         // silently shift every boundary and skew the first/last medians,
         // so refuse to emit rather than emit wrong numbers (r15 advice)
-        System.err.println(s"[soak] ${recs.size} per-batch records not a " +
+        System.err.println(s"[soak] ${durations.size} per-batch records not a " +
           s"multiple of reps=$reps (retried micro-batch?) — per-batch " +
           "stats suppressed for this timing")
         None
       } else {
-        val perRep = recs.size / reps
+        val perRep = durations.size / reps
         def med(xs: Seq[Double]): Double = {
           val s = xs.sorted; (s(s.size / 2) + s((s.size - 1) / 2)) / 2
         }
-        val durations = recs.map(_._1)
         val firsts = durations.grouped(perRep).map(_.head).toSeq
         val lasts = durations.grouped(perRep).map(_.last).toSeq
-        val base =
+        Some(
           f""""median_sec":${med(durations)}%.3f,"batches_per_replay":$perRep,""" +
-          f""""first_batch_median_sec":${med(firsts)}%.3f,"last_batch_median_sec":${med(lasts)}%.3f"""
-        // maintainers tag their amortized batches (the IVFADC twin's
-        // codebook "refit", the curation twin's file "compact"): split
-        // each tag class out so the steady-state append cost is readable
-        // next to the amortized rewrite cost (r15 verdict #5). Per-tag
-        // fields keep the tag's own name (refit_*/compact_*), so the
-        // established refit fields are unchanged.
-        val appends = recs.collect { case (d, "append") => d }
-        val tagged = recs.filterNot(_._2 == "append")
-          .groupBy(_._2).toSeq.sortBy(_._1)
-        val split =
-          if (tagged.isEmpty) ""
-          else {
-            val parts = tagged.flatMap { case (kind, ks) =>
-              val ds = ks.map(_._1)
-              if (ds.size % reps != 0) {
-                // the TOTAL-count guard above can pass while a policy
-                // fires a different number of amortized batches in
-                // different reps (timing-dependent store state); integer
-                // division would silently truncate the per-replay count —
-                // suppress that tag's split rather than emit a wrong
-                // number (r16 advice)
-                System.err.println(s"[soak] ${ds.size} $kind batches not " +
-                  s"a multiple of reps=$reps (policy fired unevenly " +
-                  s"across reps?) — $kind/append split suppressed")
-                None
-              } else Some(
-                f""","${kind}_batches_per_replay":${ds.size / reps},""" +
-                  f""""${kind}_batch_median_sec":${med(ds)}%.3f""")
-            }
-            // per-tag medians are valid independently of the append
-            // median: a replay whose EVERY batch is amortized (e.g. a
-            // 1-batch-per-rep config; note a fan-in < 2 DISABLES
-            // maintenance rather than amortizing every batch) keeps its
-            // tag medians and merely omits the append field (r17 advice)
-            val appendPart =
-              if (appends.isEmpty) ""
-              else f""","append_batch_median_sec":${med(appends)}%.3f"""
-            if (parts.isEmpty) "" else parts.mkString + appendPart
-          }
-        Some(base + split)
+          f""""first_batch_median_sec":${med(firsts)}%.3f,"last_batch_median_sec":${med(lasts)}%.3f""")
       }
     }
     val only = sys.env.get("SPARK_GRAFT_SOAK_ONLY").map(_.split(",").toSet)
@@ -648,10 +428,10 @@ object Soak {
     val scaledFirst =
       sys.env.get("SPARK_GRAFT_SOAK_ORDER").contains("scaled_first")
     val rows = SlowQueries.filter(n => only.forall(_.contains(n))).map { name =>
-      graft.streaming.StreamOps.drainBatchRecords()
+      BatchDurationListener.drain()
       def leg(dir: String) = {
         val t = time(name, dir)
-        (t, perBatchStats(graft.streaming.StreamOps.drainBatchRecords()))
+        (t, perBatchStats(BatchDurationListener.drain()))
       }
       val ((base, pbBase), (scaled, pbScaled)) =
         if (scaledFirst) { val s = leg(workDir); val b = leg(srcDir); (b, s) }
@@ -691,5 +471,46 @@ object Soak {
         "basis rejected (rc 3); re-run in an idle window")
       sys.exit(3)
     }
+  }
+}
+
+/** Micro-batch wall times (`StreamingQueryProgress.batchDuration`) of
+  * every streaming query in the JVM, for the soak's per-batch record.
+  * Registered through the static `spark.sql.streaming.streamingQueryListeners`
+  * conf, so each session (the twins' `newSession()` ones included) gets
+  * an instance; all instances feed the companion's queue.
+  */
+class BatchDurationListener extends StreamingQueryListener {
+  import BatchDurationListener._
+  override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = {
+    started.add(e.runId); ()
+  }
+  override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+    durations.add(e.progress.batchDuration / 1e3); ()
+  }
+  override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = {
+    terminated.add(e.runId); ()
+  }
+}
+
+object BatchDurationListener {
+  private val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+  private val terminated = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+  private val durations = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
+
+  /** Batch durations (seconds) recorded since the last drain, in arrival
+    * order. Started events reach the listener synchronously, progress
+    * and termination through the asynchronous listener bus; a query's
+    * termination follows its last progress event there, so waiting
+    * until every started query has terminated makes the record complete.
+    */
+  def drain(): Seq[Double] = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!terminated.containsAll(started) && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    val b = Seq.newBuilder[Double]
+    var x = durations.poll()
+    while (x != null) { b += x.doubleValue; x = durations.poll() }
+    b.result()
   }
 }

@@ -298,8 +298,22 @@ class PropertyOracleSpec extends AnyFunSuite {
     val exact = scores(edges.select(col("src").as("s")).distinct(), 64)
     val sampled = scores(SparkEntry.betweennessSources(spark, dir),
       BetweennessParams.MaxDepth)
-    def top50(m: Map[Long, Double]): Seq[Long] =
-      m.toSeq.sortBy { case (v, bc) => (-bc, v) }.take(50).map(_._1)
+    // Scores are double sums whose last bits follow the physical plan's
+    // summation order: equal scores differ by up to ~33 ulps across plans.
+    // Ties are therefore decided with an ulp tolerance: in the top-50
+    // sort a score joins the tie class of the highest score it is within
+    // tolerance of (classes rank by that head score, members by vertex
+    // id), and tau-b counts a pair as tied the same way.
+    val TieUlps = 256
+    def tied(a: Double, b: Double): Boolean =
+      math.abs(a - b) <= TieUlps * math.ulp(math.max(math.abs(a), math.abs(b)))
+    def top50(m: Map[Long, Double]): Seq[Long] = {
+      var head = Double.NaN
+      m.toSeq.sortBy(-_._2).map { case (v, bc) =>
+        if (head.isNaN || !tied(head, bc)) head = bc
+        (head, v)
+      }.sortBy { case (h, v) => (-h, v) }.take(50).map(_._2)
+    }
     val eTop = top50(exact)
     val overlap = eTop.toSet.intersect(top50(sampled).toSet).size
     // Kendall tau-b over exact's top-50 vertices (sampled score 0 when
@@ -307,11 +321,12 @@ class PropertyOracleSpec extends AnyFunSuite {
     var conc = 0; var disc = 0; var tieE = 0; var tieS = 0; var n0 = 0
     for (i <- eTop.indices; j <- i + 1 until eTop.size) {
       n0 += 1
-      val de = exact(eTop(i)) - exact(eTop(j))
-      val ds = sampled.getOrElse(eTop(i), 0.0) - sampled.getOrElse(eTop(j), 0.0)
-      if (de == 0.0) tieE += 1
-      if (ds == 0.0) tieS += 1
-      if (de != 0.0 && ds != 0.0) { if (de * ds > 0) conc += 1 else disc += 1 }
+      val (e1, e2) = (exact(eTop(i)), exact(eTop(j)))
+      val (s1, s2) = (sampled.getOrElse(eTop(i), 0.0), sampled.getOrElse(eTop(j), 0.0))
+      val te = tied(e1, e2); val ts = tied(s1, s2)
+      if (te) tieE += 1
+      if (ts) tieS += 1
+      if (!te && !ts) { if ((e1 - e2) * (s1 - s2) > 0) conc += 1 else disc += 1 }
     }
     val tau = (conc - disc).toDouble /
       math.sqrt((n0 - tieE).toDouble * (n0 - tieS).toDouble)

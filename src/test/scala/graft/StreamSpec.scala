@@ -36,6 +36,15 @@ class StreamSpec extends AnyFunSuite {
       case _ => ()
     }
 
+  /** Did a tier merge run between two per-batch file snapshots (relative
+    * or absolute path -> size)? [[StreamOps.tieredCompactStore]] names
+    * every merge output `tier<L>-<gen>-<i>.parquet` with a fresh gen, so
+    * a merge shows as a `tier*` file the previous snapshot lacked.
+    */
+  private def tierMerged(prev: Map[String, Long], cur: Map[String, Long]): Boolean =
+    (cur.keySet -- prev.keySet)
+      .exists(f => java.nio.file.Paths.get(f).getFileName.toString.startsWith("tier"))
+
   /** Per-batch folded counter snapshots must be monotone: a maintained
     * count never decreases, and no key vanishes once counted. */
   private def assertMonotoneCounts(states: Seq[Map[Long, Long]]): Unit =
@@ -160,7 +169,7 @@ class StreamSpec extends AnyFunSuite {
     val stateSnaps = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Long]]
     val got = StreamOps.graphMaintainReplayBatch(spark, dir,
       stateDirProbe = p => { stateDir = p },
-      batchProbe = (labels, snapshot) => {
+      batchProbe = Some((labels, snapshot) => {
         batches += 1
         // the incremental contraction must equal a from-scratch CC on the
         // MVCC snapshot at every intermediate state, not just the last
@@ -181,7 +190,7 @@ class StreamSpec extends AnyFunSuite {
         if (gotLabels.exists { case (_, comp) => comp > 5L }) merged = true
         fileSnaps += bucketFileSets(stateDir)
         stateSnaps += gotLabels.toMap
-      })
+      }))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(batches >= 2, s"only $batches micro-batches — need cross-batch maintenance")
     assert(merged,
@@ -247,7 +256,8 @@ class StreamSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val probes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val streamed = StreamOps.sampledQuantilesReplayBatch(spark,
-        s"$dir/events.parquet", (s, b) => { probes += ((s, b)); () })
+        s"$dir/events.parquet",
+        batchProbe = Some((s, b) => { probes += ((s, b)); () }))
       .collect().map(_.toSeq).toSeq
     assert(probes.length >= 2, s"need >=2 probed batches, got $probes")
     // the ingest prune is REAL in every batch: sampled < batch rows
@@ -328,12 +338,12 @@ class StreamSpec extends AnyFunSuite {
     val fileSnaps = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     val stateSnaps = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Long]]
     val out = StreamOps.triangleMaintainReplayBatch(spark, pairs,
-      (n, state) => {
+      batchProbe = Some((n, state) => {
         probed += n
         fileSnaps += flatFileSet(stateDir)
         stateSnaps += state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
         ()
-      },
+      }),
       stateDirProbe = p => { stateDir = p })
     assert(probed.length >= 2, s"expected >=2 probed batches, got $probed")
     assert(probed.sum == 11L, s"per-batch new-triangle counts $probed must sum to 11")
@@ -363,12 +373,12 @@ class StreamSpec extends AnyFunSuite {
     val fileSnaps = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
     val stateSnaps = scala.collection.mutable.ArrayBuffer.empty[Map[Long, Long]]
     val out = StreamOps.fourcliqueMaintainReplayBatch(spark, pairs,
-      (n, state) => {
+      batchProbe = Some((n, state) => {
         probed += n
         fileSnaps += flatFileSet(stateDir)
         stateSnaps += state.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
         ()
-      },
+      }),
       stateDirProbe = p => { stateDir = p })
     assert(probed.length >= 2, s"expected >=2 probed batches, got $probed")
     assert(probed.sum == 6L, s"per-batch new-clique counts $probed must sum to 6")
@@ -435,7 +445,7 @@ class StreamSpec extends AnyFunSuite {
       (16L, 6L)).toDF("okey", "part")
     val probes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val got = StreamOps.assocRulesReplayBatch(spark, basket,
-        batchProbe = (p, b) => { probes += ((p, b)); () })
+        batchProbe = Some((p, b) => { probes += ((p, b)); () }))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toSeq
     assert(probes.length >= 2, s"need >=2 probed batches, got $probes")
@@ -470,7 +480,7 @@ class StreamSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val probes = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val got = StreamOps.hllReplayBatch(spark, s"$dir/events.parquet",
-        (b, s) => { probes += ((b, s)); () })
+        batchProbe = Some((b, s) => { probes += ((b, s)); () }))
       .collect()(0)
     assert(probes.length >= 2, s"need >=2 probed batches, got $probes")
     // the defining property: state never exceeds the register count
@@ -487,6 +497,52 @@ class StreamSpec extends AnyFunSuite {
       s"streamed estimate ${got.toSeq} != batch ${batch.toSeq}")
   }
 
+  test("serve twins do no probe-only work without a probe: hll and triangle replays run fewer jobs") {
+    // a probe's arguments (counts, state folds) are built only when a
+    // caller passes one, so the bare replay launches strictly fewer jobs
+    val events = java.nio.file.Files.createTempDirectory("graft_probe_jobs_")
+      .resolve("events.parquet").toString
+    (0L until 2000L).map(i => i % 300L).toDF("user_id").write.parquet(events)
+    def hll(probe: Option[(Long, Long) => Unit]): Unit = {
+      StreamOps.hllReplayBatch(spark, events, batchProbe = probe).collect(); ()
+    }
+    val hllBare = jobsIn("hll-bare")(hll(None))
+    val hllProbed = jobsIn("hll-probed")(hll(Some((_, _) => ())))
+    // K9 over 8 micro-batches: the probed replay folds the state once per
+    // batch after the first append. The batch order follows file mtimes,
+    // so whether an early batch completes a triangle (and appends) varies
+    // by a few jobs between runs; three runs per side are summed.
+    val pairs = (for { a <- 1L to 9L; b <- a + 1 to 9L } yield (a, b)).toDF("a", "b")
+    def tri(probe: Option[(Long, org.apache.spark.sql.DataFrame) => Unit]): Unit = {
+      StreamOps.triangleMaintainReplayBatch(spark, pairs, batchProbe = probe, splits = 8)
+        .collect(); ()
+    }
+    val triBare = (1 to 3).map(i => jobsIn(s"tri-bare-$i")(tri(None)))
+    val triProbed = (1 to 3).map(i => jobsIn(s"tri-probed-$i")(tri(Some((_, _) => ()))))
+    info(s"jobs bare/probed: hll $hllBare/$hllProbed, triangle $triBare/$triProbed")
+    assert(hllBare < hllProbed, s"hll jobs: bare $hllBare vs probed $hllProbed")
+    assert(triBare.sum < triProbed.sum, s"triangle jobs: bare $triBare vs probed $triProbed")
+  }
+
+  test("triangleMaintainReplayBatch: non-canonical pair orientation gives the canonical input's rows") {
+    // K5 + a pendant triangle (11 triangles); the same undirected edges
+    // with a seeded half written (b, a) must be staged canonical — T1's
+    // closing probe keys the stored chain as (least, greatest)
+    val canonical = (for { a <- 1L to 5L; b <- a + 1 to 5L } yield (a, b)) ++
+      Seq((5L, 6L), (5L, 7L), (6L, 7L), (7L, 8L))
+    val rnd = new scala.util.Random(7)
+    val flip = rnd.shuffle(canonical.indices.toList).take(canonical.size / 2).toSet
+    val mixed = canonical.zipWithIndex.map { case ((a, b), i) =>
+      if (flip(i)) (b, a) else (a, b) }
+    assert(mixed.count { case (a, b) => a > b } == canonical.size / 2)
+    def rows(ps: Seq[(Long, Long)]) =
+      StreamOps.triangleMaintainReplayBatch(spark, ps.toDF("a", "b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val expected = rows(canonical)
+    assert(expected.map(_._2).sum == 33L, s"canonical census $expected")
+    assert(rows(mixed) == expected)
+  }
+
   test("triangleMaintainReplayBatch: catalog writes are delta-scaled and the chain stays bounded") {
     // r12 finding #1: the first landing of this op rebuilt a WHOLESALE
     // snapshot per batch (O(batches × E) write amplification) next to a
@@ -498,7 +554,7 @@ class StreamSpec extends AnyFunSuite {
     val chainLens = scala.collection.mutable.ArrayBuffer.empty[Int]
     val out = StreamOps.triangleMaintainReplayBatch(spark, pairs,
       splits = 8, compactEvery = 3,
-      catalogProbe = cat => { chainLens += cat.versions("T").length; () })
+      catalogProbe = Some(cat => { chainLens += cat.versions("T").length; () }))
     assert(chainLens.length >= 6, s"want a many-batch replay, got $chainLens")
     assert(chainLens.forall(_ <= 3),
       s"retained chain must stay bounded by compactEvery: $chainLens")
@@ -563,7 +619,7 @@ class StreamSpec extends AnyFunSuite {
         .collect()(0).getLong(0)
     val probed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val got = StreamOps.histQuantilesReplayBatch(spark, s"$dir/events.parquet",
-        (state, rows) => { probed += ((state, rows)); () })
+        batchProbe = Some((state, rows) => { probed += ((state, rows)); () }))
       .collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
       .toSeq
@@ -587,7 +643,7 @@ class StreamSpec extends AnyFunSuite {
       docs.selectExpr("count(DISTINCT n_chars div 50)").collect()(0).getLong(0)
     val probed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val got = StreamOps.psiReplayBatch(spark, s"$dir/documents.parquet",
-        (state, rows) => { probed += ((state, rows)); () })
+        batchProbe = Some((state, rows) => { probed += ((state, rows)); () }))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(probed.length >= 2, s"expected >=2 probed batches, got ${probed.length}")
     probed.foreach { case (state, rows) =>
@@ -606,7 +662,7 @@ class StreamSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val probed = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[String])]
     val got = StreamOps.bm25ReplayBatch(spark, s"$dir/documents.parquet",
-        (docs, cols) => { probed += ((docs, cols)); () })
+        batchProbe = Some((docs, cols) => { probed += ((docs, cols)); () }))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probed.length >= 2, s"expected >=2 probed batches, got ${probed.length}")
     probed.foreach { case (docs, cols) =>
@@ -629,7 +685,8 @@ class StreamSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val probed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val got = StreamOps.embeddingTopKReplayBatch(spark,
-        s"$dir/embeddings.parquet", (cells, rows) => { probed += ((cells, rows)); () })
+        s"$dir/embeddings.parquet",
+        batchProbe = Some((cells, rows) => { probed += ((cells, rows)); () }))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probed.length >= 2, s"expected >=2 probed batches, got $probed")
     // each batch touches only its own cells (10 labels exist; a batch
@@ -670,17 +727,12 @@ class StreamSpec extends AnyFunSuite {
         finally walk.close()
       }
     }
-    StreamOps.drainBatchRecords() // clear other tests' leftovers
     val got = StreamOps.ivfAdcTopKReplayBatch(spark, s"$dir/embeddings.parquet",
-        batchProbe = (rows, refit) => {
+        batchProbe = Some((rows, refit) => {
           probes += ((rows, refit)); snaps += fileMap(); ()
-        },
+        }),
         stateDirProbe = p => { store = p })
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // per-batch tags align 1:1 with the probes: "compact" marks batches
-    // where a tier merge ran (r18 — cell files MAY merge then)
-    val tags = StreamOps.drainBatchRecords().map(_._2)
-    assert(tags.length == probes.length, s"$tags vs ${probes.length} probes")
     assert(probes.length >= 2, s"expected >=2 probed batches, got $probes")
     probes.foreach { case (rows, _) => assert(rows >= 1L, s"empty batch: $probes") }
     // at least one MID-STREAM refit (the drift policy fires the
@@ -689,9 +741,9 @@ class StreamSpec extends AnyFunSuite {
     assert(probes.exists(_._2 == 1L), s"no mid-stream refit fired: $probes")
     // append-only between refits, tier merges excepted: on a plain
     // append batch every pre-existing file survives at its size; a
-    // "compact" batch merges one level's fan-in (never the whole store)
+    // compact batch merges one level's fan-in (never the whole store)
     for (i <- 1 until snaps.length
-         if probes(i)._2 == 0L && tags(i) != "compact") {
+         if probes(i)._2 == 0L && !tierMerged(snaps(i - 1), snaps(i))) {
       val prev = snaps(i - 1); val cur = snaps(i)
       val lost = prev.filterNot { case (f, sz) => cur.get(f).contains(sz) }
       assert(lost.isEmpty,
@@ -764,23 +816,20 @@ class StreamSpec extends AnyFunSuite {
         finally walk.close()
       }
     }
-    StreamOps.drainBatchRecords() // clear other tests' leftovers
     val got = StreamOps.ivfAdcTopKReplayBatch(spark, s"$dir/embeddings.parquet",
-        batchProbe = (rows, refit) => {
+        batchProbe = Some((rows, refit) => {
           probes += ((rows, refit)); snaps += fileMap(); ()
-        },
+        }),
         stateDirProbe = p => { store = p })
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val tags = StreamOps.drainBatchRecords().map(_._2)
-    assert(tags.length == probes.length, s"$tags vs ${probes.length} probes")
     assert(probes.count(_._2 == 1L) == 1,
       s"no-drift replay must rewrite exactly once (first-epoch fit): $probes")
     // every batch after the fit appended only (tier merges excepted,
-    // r18: a "compact"-tagged batch merges one level's fan-in, never a
-    // drift rewrite) — on plain append batches pre-existing cell files
-    // survive at their size
+    // r18: a compact batch merges one level's fan-in, never a drift
+    // rewrite) — on plain append batches pre-existing cell files survive
+    // at their size
     for (i <- 1 until snaps.length
-         if probes(i)._2 == 0L && tags(i) != "compact") {
+         if probes(i)._2 == 0L && !tierMerged(snaps(i - 1), snaps(i))) {
       val prev = snaps(i - 1); val cur = snaps(i)
       val lost = prev.filterNot { case (f, sz) => cur.get(f).contains(sz) }
       assert(lost.isEmpty,
@@ -1007,22 +1056,6 @@ class StreamSpec extends AnyFunSuite {
     var batches = 0
     var admitted = 0L
     var stateRoot = ""
-    StreamOps.drainBatchRecords() // clear other tests' leftovers
-    val res = StreamOps.curationReplayBatch(spark, s"$dir/documents.parquet",
-      batchProbe = (a, _) => { batches += 1; admitted += a },
-      stateDirProbe = p => { stateRoot = p })
-    val streamed = res.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5)))
-    assert(batches >= 2, s"need >=2 probed micro-batches, got $batches")
-    assert(admitted > 0L)
-    // bounded read fan-in, size-tiered since r18: batches where any
-    // level-merge fired carry the "compact" tag, and each DIR's file
-    // count stays <= fanIn per tier level (level-0 appends waiting for a
-    // merge plus at most fanIn-1 files per higher tier) — never
-    // O(batches) files, never an O(store) wholesale rewrite
-    val recs = StreamOps.drainBatchRecords()
-    assert(recs.exists(_._2 == "compact") && recs.exists(_._2 == "append"),
-      s"expected both compact and append tags, got ${recs.map(_._2)}")
     def parquetFiles(p: String): Seq[java.io.File] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
@@ -1031,6 +1064,29 @@ class StreamSpec extends AnyFunSuite {
       if (!d.exists()) Seq.empty
       else walk(d).filter(_.getName.endsWith(".parquet"))
     }
+    val stores = Seq("shingles", "bands", "docs")
+    // post-batch snapshot of the tiered stores' files (path -> size)
+    val snaps = scala.collection.mutable.ArrayBuffer(Map.empty[String, Long])
+    val res = StreamOps.curationReplayBatch(spark, s"$dir/documents.parquet",
+      batchProbe = Some((a, _) => {
+        batches += 1; admitted += a
+        snaps += stores.flatMap(st => parquetFiles(s"$stateRoot/$st"))
+          .map(f => (f.getPath, f.length)).toMap
+        ()
+      }),
+      stateDirProbe = p => { stateRoot = p })
+    val streamed = res.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(batches >= 2, s"need >=2 probed micro-batches, got $batches")
+    assert(admitted > 0L)
+    // bounded read fan-in, size-tiered since r18: some batches run a
+    // level merge (a new tier<L>- file appears) and some only append,
+    // and each DIR's file count stays <= fanIn per tier level (level-0
+    // appends waiting for a merge plus at most fanIn-1 files per higher
+    // tier) — never O(batches) files, never an O(store) wholesale rewrite
+    val merged = snaps.sliding(2).map(w => tierMerged(w(0), w(1))).toSeq
+    assert(merged.contains(true) && merged.contains(false),
+      s"expected both compact and append batches, got $merged")
     // the tiered invariant, asserted per DIR per LEVEL (r18 advice #3:
     // the old exact fully-merged counts assumed every bucket receives
     // exactly fanIn level-0 appends — a distribution where a bucket
@@ -1039,7 +1095,7 @@ class StreamSpec extends AnyFunSuite {
     val tierRe = "^tier(\\d+)-".r
     def levelOf(n: String): Int =
       tierRe.findFirstMatchIn(n).map(_.group(1).toInt).getOrElse(0)
-    Seq("shingles", "bands", "docs").foreach { store =>
+    stores.foreach { store =>
       val byDirLevel = parquetFiles(s"$stateRoot/$store")
         .groupBy(f => (f.getParent, levelOf(f.getName)))
       byDirLevel.foreach { case ((dir, lvl), fs) =>
@@ -1089,7 +1145,7 @@ class StreamSpec extends AnyFunSuite {
     var batches = 0
     var superseded = 0L
     val res = StreamOps.curationReplayBatch(spark, docsPath,
-      batchProbe = (_, s) => { batches += 1; superseded += s })
+      batchProbe = Some((_, s) => { batches += 1; superseded += s }))
     val streamed = res.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getString(2), r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(batches >= 2, s"need >=2 probed micro-batches, got $batches")
