@@ -29,11 +29,18 @@ final case class Response(seqNo: Long, responseTag: Long, worker: Worker,
   * thread-per-request dispatch, so there is no 100-request lifetime cap.
   *
   * Reads (ops 3/4) are size-gated. A version at or under Spark's
-  * broadcast threshold is collected by one job and traversed on the
-  * driver, as the reference's secondary server walks its in-memory
-  * adjacency matrix of at most 30×30 cells (`#define N 30`,
-  * `secondary_server.c:94-213`); a larger version runs the distributed
-  * operators. Both paths return the same rows in the same order.
+  * broadcast threshold is collected by one job, kept by the catalog until
+  * it is superseded, evicted or vacuumed, and traversed on the driver, as
+  * the reference's secondary server walks its in-memory adjacency matrix of
+  * at most 30×30 cells (`#define N 30`, `secondary_server.c:94-213`); a
+  * larger version runs the distributed operators. Both paths return the
+  * same rows in the same order.
+  *
+  * Concurrency model: requests may run on any number of threads. Reads
+  * take no lock: a published version never changes, and a read resolves
+  * its version once, then uses exactly that version. Writes to one graph
+  * serialize only at the catalog's publish step, never across their Spark
+  * jobs (see [[GraphCatalog]]).
   */
 final class GraphEngine(spark: SparkSession, val catalog: GraphCatalog) {
 
@@ -64,26 +71,23 @@ final class GraphEngine(spark: SparkSession, val catalog: GraphCatalog) {
   def executeLine(line: String, payload: Payload): Response =
     execute(RequestParser.parse(line), payload)
 
-  /** Ops 3/4 on the latest version of `name`. The planner's size estimate
-    * of the version comes from the file listing (no Spark job); at or
-    * under `spark.sql.autoBroadcastJoinThreshold`, Spark's own rule for
-    * "small enough to ship whole", the version is collected once and
-    * traversed on the driver. Above it, or with it at -1, the distributed
-    * operator runs.
+  /** Ops 3/4 on the latest version of `name`. At or under
+    * `spark.sql.autoBroadcastJoinThreshold`, Spark's own rule for "small
+    * enough to ship whole", the version is traversed on the driver: the
+    * catalog collects it once per version and keeps it, so a repeated read
+    * of an unchanged version runs no Spark job. Above it, or with it at -1,
+    * the distributed operator runs.
     */
-  private def traverse(name: String, bfs: Boolean, start: Long): DataFrame = {
-    val edges = catalog.load(name) // throws GraphNotFound: add-before-read rule
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold >= 0 && edges.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold) {
-      val g = GraphOps.LocalGraph.collect(edges)
-      if (start < 1 || !g.contains(start)) throw badStart(name, start)
-      if (bfs) GraphOps.bfsLevelsLocal(g, start) else GraphOps.dfsLeavesLocal(g, start)
-    } else {
-      val present = edges.filter(col("src") === start || col("dst") === start).limit(1)
-      if (start < 1 || present.isEmpty) throw badStart(name, start)
-      if (bfs) GraphOps.bfsLevels(edges, start) else GraphOps.dfsLeaves(edges, start)
+  private def traverse(name: String, bfs: Boolean, start: Long): DataFrame =
+    catalog.latestForTraversal(name) match { // throws GraphNotFound: add-before-read rule
+      case Right(g) =>
+        if (start < 1 || !g.contains(start)) throw badStart(name, start)
+        if (bfs) GraphOps.bfsLevelsLocal(g, start) else GraphOps.dfsLeavesLocal(g, start)
+      case Left(edges) =>
+        val present = edges.filter(col("src") === start || col("dst") === start).limit(1)
+        if (start < 1 || present.isEmpty) throw badStart(name, start)
+        if (bfs) GraphOps.bfsLevels(edges, start) else GraphOps.dfsLeaves(edges, start)
     }
-  }
 
   private def badStart(name: String, start: Long) = new IllegalArgumentException(
     s"start vertex $start not in graph '$name' (reference would index adj[${start - 1}])")

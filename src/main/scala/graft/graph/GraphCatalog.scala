@@ -1,6 +1,10 @@
 package graft.graph
 
-import org.apache.hadoop.fs.Path
+import java.io.FileNotFoundException
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -31,14 +35,36 @@ final class GraphAlreadyExistsException(name: String)
   *
   * Concurrency model: the reference guards each graph file with
   * readers-writers semaphores (`primary_server.c:138-153`,
-  * `secondary_server.c:264-294`). Here every write creates a NEW versioned
-  * snapshot directory (`<base>/<name>/v<NNNNNN>`) and readers resolve the
-  * highest complete version at load time — old snapshots are never deleted
-  * by a write, so an in-flight read keeps its files and a concurrent reader
-  * sees either the previous or the new version, never a half-deleted
-  * directory (a plain `mode("overwrite")` deletes-then-writes and does NOT
-  * give this). `vacuum()` reclaims superseded versions when no readers
-  * remain (retention is the caller's policy, as in any MVCC table format).
+  * `secondary_server.c:264-294`). Here a version is immutable once
+  * published, so readers take no lock at all:
+  *  - A write runs its Spark job into a unique `_staging-<uuid>` directory
+  *    under the graph (names starting with `_` are invisible to readers and
+  *    to Spark), with no lock held.
+  *  - It then publishes under a per-graph writer lock shared by every
+  *    catalog in the JVM — the reference's writer semaphore, held only for
+  *    one directory listing and one rename. Under it the write's
+  *    precondition is checked again (`add`: no version exists; `modify`,
+  *    `modifyDelta`: one does), and the staging directory is renamed
+  *    without overwrite to the next free number: one past the highest
+  *    numbered `v`/`d` directory, complete or not, so full snapshots and
+  *    deltas share one number space and a crashed write's leftovers never
+  *    block the graph. A rename that finds the number taken (another
+  *    process) lists again and retries.
+  *  - A loser fails with the same typed exception as the early check, and
+  *    its staging directory is deleted.
+  *
+  * Readers resolve the newest complete version (parquet `_SUCCESS` marker)
+  * from one listing, so they see either the previous or the new version,
+  * never a partial one, and a concurrent writer never deletes what a reader
+  * holds (a plain `mode("overwrite")` deletes-then-writes and does NOT give
+  * this). `vacuum()` reclaims superseded versions and staging leftovers when
+  * no reader or writer remains (retention is the caller's policy, as in any
+  * MVCC table format).
+  *
+  * Driver-side traversal reads ([[latestForTraversal]]) keep the collected
+  * graph of each name's latest version, keyed by its chain's paths and
+  * `_SUCCESS` modification times and bounded by Spark's broadcast threshold,
+  * so a repeated read of an unchanged version runs no Spark job.
   *
   * At scale the base dir is any Hadoop-compatible FS (HDFS/S3); edge tables
   * are partitioned data, never driver-resident.
@@ -50,11 +76,11 @@ final class GraphAlreadyExistsException(name: String)
   * table WITHOUT an Exchange (only the small frontier side shuffles to
   * match) — at 100 TB that deletes a full edge-table shuffle per traversal
   * round. Implemented as external tables over the same versioned
-  * directories (bucket metadata lives in the session catalog; the files
-  * stay plain parquet, so time travel and non-bucketed readers of the same
-  * paths keep working). Table names are namespaced by a base-dir hash —
-  * two catalogs holding the same graph name never collide in the shared
-  * metastore.
+  * directories, registered after publish (bucket metadata lives in the
+  * session catalog; the files stay plain parquet, so time travel and
+  * non-bucketed readers of the same paths keep working). Table names are
+  * namespaced by a base-dir hash — two catalogs holding the same graph name
+  * never collide in the shared metastore.
   */
 final class GraphCatalog(spark: SparkSession, baseDir: String,
                          buckets: Option[Int] = None) {
@@ -62,71 +88,137 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
   private def fs = new Path(baseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def graphDir(name: String): Path = new Path(s"$baseDir/$name")
+  /** Renames without overwrite, which `FileSystem.rename` cannot promise
+    * (it may move the source INTO an existing directory).
+    */
+  private lazy val files = FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
 
-  private def tableName(name: String, version: Long): String = {
+  private def graphDir(name: String): Path = fs.makeQualified(new Path(s"$baseDir/$name"))
+
+  private def tableName(name: String, suffix: String): String = {
     val ns = java.lang.Integer.toHexString(baseDir.hashCode)
     val safe = name.toLowerCase.replaceAll("[^a-z0-9]", "_")
-    f"graft_${ns}_${safe}_v$version%06d"
+    s"graft_${ns}_${safe}_$suffix"
   }
 
-  /** One complete on-disk version: `delta = false` is a full snapshot
+  private def tableName(name: String, version: Long): String = tableName(name, f"v$version%06d")
+
+  /** One numbered on-disk version: `delta = false` is a full snapshot
     * (`v%06d`), `delta = true` holds ONLY the edges added since its
     * predecessor (`d%06d`) — see [[modifyDelta]].
     */
   private[graph] case class VersionEntry(version: Long, path: Path, delta: Boolean)
 
-  private def versionsOf(name: String): Seq[VersionEntry] = {
-    val dir = graphDir(name)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isDirectory && (n.startsWith("v") || n.startsWith("d"))
-      }
-      .flatMap(s => s.getPath.getName.drop(1).toLongOption
-        .map(v => VersionEntry(v, s.getPath, s.getPath.getName.startsWith("d"))))
-      // only complete snapshots (parquet commit marker present)
-      .filter(e => fs.exists(new Path(e.path, "_SUCCESS")))
-      .sortBy(_.version)
+  /** A complete version and its `_SUCCESS` modification time. */
+  private case class Committed(entry: VersionEntry, at: Long)
+
+  /** The graph directory's children, by one listing. */
+  private def children(name: String): Seq[FileStatus] =
+    try fs.listStatus(graphDir(name)).toSeq
+    catch { case _: FileNotFoundException => Seq.empty }
+
+  /** Every numbered version directory, complete or not, oldest first. */
+  private def numbered(children: Seq[FileStatus]): Seq[VersionEntry] =
+    children.flatMap { s =>
+      val n = s.getPath.getName
+      if (s.isDirectory && (n.startsWith("v") || n.startsWith("d")))
+        n.drop(1).toLongOption.map(VersionEntry(_, s.getPath, n.startsWith("d")))
+      else None
+    }.sortBy(_.version)
+
+  /** The complete versions among `vs`, newest first; `_SUCCESS` is probed
+    * lazily, only as far as the caller reads.
+    */
+  private def committedNewestFirst(vs: Seq[VersionEntry]): Iterator[Committed] =
+    vs.reverseIterator.flatMap { e =>
+      try Some(Committed(e, fs.getFileStatus(new Path(e.path, "_SUCCESS")).getModificationTime))
+      catch { case _: FileNotFoundException => None }
+    }
+
+  /** The chain a read of the first (newest) element must union: it and the
+    * older elements down to the first full snapshot, oldest first. A full
+    * snapshot is its own one-element chain — the wholesale-replace path pays
+    * no union at all. Reads `newestFirst` only that far.
+    */
+  private def chainOf(newestFirst: Iterator[Committed]): List[Committed] = {
+    var chain = List.empty[Committed]
+    var base = false
+    while (!base && newestFirst.hasNext) {
+      val c = newestFirst.next()
+      chain = c :: chain
+      base = !c.entry.delta
+    }
+    chain
   }
 
-  private def writeVersion(name: String, edges: DataFrame,
-                           delta: Boolean = false): Unit = {
-    val next = versionsOf(name).lastOption.map(_.version + 1).getOrElse(1L)
+  /** The latest version's chain, from one listing. */
+  private def latestChain(name: String): List[Committed] =
+    chainOf(committedNewestFirst(numbered(children(name))))
+
+  /** Writes `edges` to a staging directory with no lock held, then
+    * publishes it as the next version if `admit(latest complete version)`
+    * holds under the graph's writer lock. Returns the published version, or
+    * None when `admit` refused; the staging directory is gone either way.
+    */
+  private def writeVersion(name: String, edges: DataFrame, delta: Boolean = false)
+                          (admit: Option[Long] => Boolean): Option[Long] = {
+    val id = UUID.randomUUID().toString.replace("-", "")
+    val staging = new Path(graphDir(name), s"${GraphCatalog.StagingPrefix}$id")
     val prefix = if (delta) "d" else "v"
-    val target = new Path(graphDir(name), f"$prefix$next%06d")
     // one fixed schema for every version: loads pass it to the reader
     // and so run no footer-inference job
     val typed = edges.select(col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
-    buckets match {
-      case Some(n) =>
-        typed.write
-          .option("path", target.toString)
-          .bucketBy(n, "src").sortBy("src")
-          .format("parquet").saveAsTable(tableName(name, next))
-      case None =>
-        typed.write.mode("errorifexists")
-          .parquet(target.toString)
+    try {
+      buckets match {
+        case Some(n) =>
+          val t = tableName(name, s"staging_$id")
+          try typed.write.option("path", staging.toString)
+            .bucketBy(n, "src").sortBy("src")
+            .format("parquet").saveAsTable(t)
+          finally spark.sql(s"DROP TABLE IF EXISTS $t") // external: the files stay
+        case None =>
+          typed.write.mode("errorifexists").parquet(staging.toString)
+      }
+      val published = publish(name, staging, prefix, admit)
+      for (v <- published; n <- buckets) {
+        val t = tableName(name, v)
+        val at = versionPath(name, prefix, v).toString.replace("'", "\\'")
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+        spark.sql(s"CREATE TABLE $t (src BIGINT, dst BIGINT) USING parquet " +
+          s"CLUSTERED BY (src) SORTED BY (src) INTO $n BUCKETS LOCATION '$at'")
+      }
+      published
+    } finally fs.delete(staging, true) // a published staging dir no longer exists
+  }
+
+  private def versionPath(name: String, prefix: String, v: Long): Path =
+    new Path(graphDir(name), f"$prefix$v%06d")
+
+  private def publish(name: String, staging: Path, prefix: String,
+                      admit: Option[Long] => Boolean): Option[Long] = {
+    GraphCatalog.writerLock(graphDir(name)).synchronized {
+      @annotation.tailrec def attempt(): Option[Long] = {
+        val vs = numbered(children(name))
+        if (!admit(committedNewestFirst(vs).nextOption().map(_.entry.version))) None
+        else {
+          val v = vs.lastOption.fold(1L)(_.version + 1)
+          val renamed =
+            try { files.rename(staging, versionPath(name, prefix, v), Options.Rename.NONE); true }
+            catch { case _: FileAlreadyExistsException => false }
+          if (renamed) Some(v) else attempt()
+        }
+      }
+      attempt()
     }
   }
 
-  /** The version chain a read of `version` must union: the latest FULL
-    * snapshot at or below it, plus every delta between the two. A full
-    * snapshot is its own one-element chain — the wholesale-replace path
-    * pays no union at all.
+  /** op 1 — AddGraph (reference `primary_server.c:86-179`). The check
+    * before the write fails fast; the one at publish decides.
     */
-  private def chainTo(name: String, version: Long): Seq[VersionEntry] = {
-    val upTo = versionsOf(name).filter(_.version <= version)
-    val baseIdx = upTo.lastIndexWhere(!_.delta)
-    if (baseIdx < 0) upTo else upTo.drop(baseIdx)
-  }
-
-  /** op 1 — AddGraph (reference `primary_server.c:86-179`). */
   def add(name: String, edges: DataFrame): Unit = {
-    if (exists(name)) throw new GraphAlreadyExistsException(name)
-    writeVersion(name, edges)
+    if (exists(name) || writeVersion(name, edges)(_.isEmpty).isEmpty)
+      throw new GraphAlreadyExistsException(name)
   }
 
   /** op 2 — ModifyGraph: wholesale replace as a new snapshot version;
@@ -134,8 +226,8 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     * instructions.txt:18-20).
     */
   def modify(name: String, edges: DataFrame): Unit = {
-    if (!exists(name)) throw new GraphNotFoundException(name)
-    writeVersion(name, edges)
+    if (!exists(name) || writeVersion(name, edges)(_.nonEmpty).isEmpty)
+      throw new GraphNotFoundException(name)
   }
 
   /** Opt-in DELTA version (edge additions only): the streaming-ingest
@@ -166,7 +258,8 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
           "current chain — deltas must be additive and pairwise disjoint " +
           "(a duplicate is served twice by every subsequent load)")
     }
-    writeVersion(name, delta, delta = true)
+    if (writeVersion(name, delta, delta = true)(_.nonEmpty).isEmpty)
+      throw new GraphNotFoundException(name)
   }
 
   /** Rewrite the latest version's delta chain into ONE new full snapshot,
@@ -179,25 +272,26 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     * LSM/lakehouse amortization (total rewrite bytes O(E·batches/k)).
     * `load` contents are identical before and after (the chain union is
     * materialized into the new base). No-op when the latest version is
-    * already a full snapshot. Like [[vacuum]], run only when no reader
-    * may still hold superseded snapshots.
+    * already a full snapshot, and when another write lands first (the
+    * compacted snapshot publishes only over the chain it read). Like
+    * [[vacuum]], run only when no reader may still hold superseded
+    * snapshots.
     */
   def compact(name: String): Unit = {
-    val vs = versionsOf(name)
-    if (vs.isEmpty) throw new GraphNotFoundException(name)
-    val chain = chainTo(name, vs.last.version)
-    if (!chain.last.delta) return // latest is already a full snapshot
-    writeVersion(name, loadChain(name, chain))
-    vacuum(name, keep = 1)
+    val chain = latestChain(name).map(_.entry)
+    if (chain.isEmpty) throw new GraphNotFoundException(name)
+    if (chain.last.delta &&
+        writeVersion(name, loadChain(name, chain))(_.contains(chain.last.version)).nonEmpty)
+      vacuum(name, keep = 1)
   }
 
   /** GraphScan of the latest complete snapshot
     * (reference `secondary_server.c:272-286`).
     */
   def load(name: String): DataFrame = {
-    val vs = versionsOf(name)
-    if (vs.isEmpty) throw new GraphNotFoundException(name)
-    loadChain(name, chainTo(name, vs.last.version))
+    val chain = latestChain(name)
+    if (chain.isEmpty) throw new GraphNotFoundException(name)
+    loadChain(name, chain.map(_.entry))
   }
 
   /** Path read, upgraded to the catalog-table read (which carries the
@@ -220,18 +314,18 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     * stays queryable; a delta version resolves to its chain's union.
     */
   def load(name: String, version: Long): DataFrame = {
-    val vs = versionsOf(name)
-    vs.find(_.version == version) match {
-      case Some(_) => loadChain(name, chainTo(name, version))
-      case None =>
-        throw GraphNotFoundException.version(name, version, vs.map(_.version))
-    }
+    val vs = numbered(children(name))
+    val chain = chainOf(committedNewestFirst(vs.filter(_.version <= version)))
+    if (chain.lastOption.exists(_.entry.version == version)) loadChain(name, chain.map(_.entry))
+    else throw GraphNotFoundException.version(name, version,
+      committedNewestFirst(vs).map(_.entry.version).toSeq.reverse)
   }
 
   /** Complete versions of `name` (full and delta), oldest first. */
-  def versions(name: String): Seq[Long] = versionsOf(name).map(_.version)
+  def versions(name: String): Seq[Long] =
+    committedNewestFirst(numbered(children(name))).map(_.entry.version).toSeq.reverse
 
-  def exists(name: String): Boolean = versionsOf(name).nonEmpty
+  def exists(name: String): Boolean = committedNewestFirst(numbered(children(name))).hasNext
 
   def list(): Seq[String] = {
     val base = new Path(baseDir)
@@ -240,19 +334,24 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
       .toSeq.sorted.filter(exists)
   }
 
-  /** Delete all versions of `name` except the newest `keep`. Run only when
-    * no reader may still hold superseded snapshots.
+  /** Delete all versions of `name` except the newest `keep`, and the
+    * staging directories of unpublished writes. Run only when no reader may
+    * still hold superseded snapshots and no writer is in flight (its
+    * staging directory would go).
     */
   def vacuum(name: String, keep: Int = 1): Unit = {
-    val vs = versionsOf(name)
+    evict(name)
+    val all = children(name)
+    all.filter(_.getPath.getName.startsWith(GraphCatalog.StagingPrefix))
+      .foreach(s => fs.delete(s.getPath, true))
+    val vs = committedNewestFirst(numbered(all)).toSeq.reverse
     if (vs.length <= keep) return
     // never orphan a delta from its base: the cut must not pass the full
     // snapshot anchoring the oldest retained version's chain
-    val oldestRetained = vs(vs.length - keep).version
-    val anchor = chainTo(name, oldestRetained).headOption
-      .map(_.version).getOrElse(oldestRetained)
-    val cut = math.min(anchor, oldestRetained)
-    vs.filter(_.version < cut).foreach { e =>
+    val oldestRetained = vs(vs.length - keep).entry.version
+    val cut = chainOf(vs.filter(_.entry.version <= oldestRetained).reverseIterator)
+      .head.entry.version
+    vs.map(_.entry).filter(_.version < cut).foreach { e =>
       spark.sql(s"DROP TABLE IF EXISTS ${tableName(name, e.version)}")
       fs.delete(e.path, true)
     }
@@ -287,10 +386,83 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     * registered graphs. Spark's own lifecycle handles in-flight actions.
     */
   def dropAll(): Unit = {
+    cache.synchronized { cache.clear(); cachedBytes = 0L }
     for (name <- list(); v <- versions(name))
       spark.sql(s"DROP TABLE IF EXISTS ${tableName(name, v)}")
     val base = new Path(baseDir)
     if (fs.exists(base)) fs.delete(base, true)
     ()
   }
+
+  /** A collected latest version, keyed by its chain's paths and `_SUCCESS`
+    * modification times (a path re-created after `dropAll` gets a new
+    * time), with the planner's size of its files.
+    */
+  private case class Cached(key: Seq[(Path, Long)], graph: GraphOps.LocalGraph, bytes: Long)
+
+  /** One entry per graph name, least recently used first. */
+  private val cache = new java.util.LinkedHashMap[String, Cached](16, 0.75f, true)
+  private var cachedBytes = 0L
+
+  /** The latest version of `name` for a traversal, resolved by one listing:
+    * `Right` its [[GraphOps.LocalGraph]] when its files' planner size is at
+    * most `spark.sql.autoBroadcastJoinThreshold`, `Left` its edge table
+    * otherwise, or always when the threshold is -1. Spark's own rule for
+    * "small enough to ship whole" also bounds the cache: the entries' sizes
+    * sum to at most the threshold, read on every call, and the least
+    * recently used go first. A repeated read of an unchanged version runs no
+    * Spark job; a miss collects exactly the resolved chain (one job). No
+    * lock is held across that job, so concurrent misses may both collect.
+    */
+  def latestForTraversal(name: String): Either[DataFrame, GraphOps.LocalGraph] = {
+    val chain = latestChain(name)
+    if (chain.isEmpty) throw new GraphNotFoundException(name)
+    val key = chain.map(c => (c.entry.path, c.at))
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val hit = cache.synchronized {
+      trim(limit)
+      Option(cache.get(name)).filter(_.key == key).orElse { evict(name); None }
+    }
+    hit.map(c => Right(c.graph)).getOrElse {
+      val edges = loadChain(name, chain.map(_.entry))
+      val bytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+      if (limit < 0 || bytes > limit) Left(edges)
+      else {
+        val g = GraphOps.LocalGraph.collect(edges)
+        cache.synchronized {
+          evict(name)
+          cache.put(name, Cached(key, g, bytes.toLong))
+          cachedBytes += bytes.toLong
+          trim(limit)
+        }
+        Right(g)
+      }
+    }
+  }
+
+  private def evict(name: String): Unit = cache.synchronized {
+    Option(cache.remove(name)).foreach(c => cachedBytes -= c.bytes)
+  }
+
+  /** Drops least recently used entries until the sizes sum to `limit`. */
+  private def trim(limit: Long): Unit = {
+    val lru = cache.values.iterator
+    while (cachedBytes > math.max(limit, 0L) && lru.hasNext) {
+      cachedBytes -= lru.next().bytes
+      lru.remove()
+    }
+  }
+}
+
+object GraphCatalog {
+  /** Directory-name prefix of unpublished writes. */
+  private val StagingPrefix = "_staging-"
+
+  private val writerLocks = new ConcurrentHashMap[String, AnyRef]()
+
+  /** The writer lock of one graph directory, shared by every catalog of
+    * this JVM.
+    */
+  private def writerLock(graphDir: Path): AnyRef =
+    writerLocks.computeIfAbsent(graphDir.toString, _ => new AnyRef)
 }

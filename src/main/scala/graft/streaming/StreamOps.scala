@@ -2812,6 +2812,10 @@ object StreamOps {
     * and once more at serve — writes scale with the delta, reads with
     * the key-bounded folded tiers, and no batch rewrites stored state.
     *
+    * Input: `pairs0` (a, b) holds each undirected edge once, in either
+    * orientation; staging writes it canonical (a < b), which the rank
+    * attribution and the closing-edge probe rely on.
+    *
     * Oracle: the end state equals batch `fourclique_counts` on the full
     * snapshot — ONE oracle replays both twins. `batchProbe(newCliques,
     * state)` lets StreamSpec assert per-batch increments.
@@ -2831,6 +2835,7 @@ object StreamOps {
     val state = s"$tmp/state"
     stateDirProbe(state)
     pairs0.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
       .repartition(splits).write.parquet(inDir)
     val schema = spark.read.parquet(inDir).schema
     val cat = new graft.graph.GraphCatalog(spark, s"$tmp/graphs")

@@ -248,8 +248,10 @@ class EngineSpec extends AnyFunSuite {
     def read(seq: Long, op: Op, v: Long) =
       engine.execute(GraphRequest(seq, op, "GS.txt"), StartVertex(v)).result.get.collect().toSeq
     var bfs, dfs = Seq.empty[org.apache.spark.sql.Row]
+    // the first read collects the version; reads of it after that run none
     assert(jobsIn("engine-bfs-local") { bfs = read(2, Op.BfsLevels, 2) } == 1)
-    assert(jobsIn("engine-dfs-local") { dfs = read(3, Op.DfsLeaves, 2) } == 1)
+    assert(jobsIn("engine-dfs-local") { dfs = read(3, Op.DfsLeaves, 2) } == 0)
+    assert(jobsIn("engine-bfs-cached") { assert(read(3, Op.BfsLevels, 2) == bfs) } == 0)
     assert(bfs.map(r => (r.getLong(0), r.getLong(1))) ==
       Seq((2L, 0L), (1L, 1L), (3L, 1L), (4L, 1L), (5L, 2L)))
     assert(dfs.map(_.getLong(0)) == Seq(1L, 3L, 5L))
@@ -272,5 +274,43 @@ class EngineSpec extends AnyFunSuite {
       assert(read(5, Op.DfsLeaves, 2) == dfs)
       assert(failures() == localFailures)
     } finally spark.conf.set(key, prev)
+  }
+
+  test("driver read cache: reads follow modify, and dropAll plus a re-add of the name") {
+    val engine = freshEngine()
+    def add(edges: org.apache.spark.sql.DataFrame) =
+      engine.execute(GraphRequest(1, Op.AddGraph, "GR.txt"), GraphPayload(edges))
+    def bfs() = engine.execute(GraphRequest(2, Op.BfsLevels, "GR.txt"), StartVertex(1))
+      .result.get.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    add(undirected((1, 2), (2, 3)))
+    assert(bfs() == Seq((1L, 0L), (2L, 1L), (3L, 2L)))
+    engine.execute(GraphRequest(3, Op.ModifyGraph, "GR.txt"),
+      GraphPayload(undirected((1, 2), (1, 3), (3, 4))))
+    assert(bfs() == Seq((1L, 0L), (2L, 1L), (3L, 1L), (4L, 2L)))
+    // the same name re-created at the same version path
+    engine.catalog.dropAll()
+    add(undirected((1, 5)))
+    assert(engine.catalog.versions("GR.txt") == Seq(1L))
+    assert(bfs() == Seq((1L, 0L), (5L, 1L)))
+  }
+
+  test("driver read cache: entries' sizes stay under the broadcast threshold, least recently used evicted") {
+    val engine = freshEngine()
+    engine.execute(GraphRequest(1, Op.AddGraph, "GA.txt"), GraphPayload(undirected((1, 2))))
+    engine.execute(GraphRequest(2, Op.AddGraph, "GB.txt"), GraphPayload(undirected((1, 3))))
+    def size(name: String) =
+      engine.catalog.load(name).queryExecution.optimizedPlan.stats.sizeInBytes.toLong
+    val tags = Iterator.from(1)
+    def read(name: String) = jobsIn(s"engine-lru-${tags.next()}") {
+      engine.execute(GraphRequest(3, Op.DfsLeaves, name), StartVertex(1)).result.get.collect()
+      ()
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    // room for either graph, not for both
+    spark.conf.set(key, (size("GA.txt") + size("GB.txt") - 1).toString)
+    try assert(Seq(read("GA.txt"), read("GB.txt"), read("GA.txt")) == Seq(1, 1, 1))
+    finally spark.conf.set(key, prev)
+    assert(Seq(read("GA.txt"), read("GB.txt"), read("GA.txt")) == Seq(0, 1, 0))
   }
 }

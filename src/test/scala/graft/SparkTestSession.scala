@@ -36,24 +36,15 @@ object SparkTestSession {
   /** Spark jobs `body` ran, counted by job tag through the status
     * tracker. A tag, unlike a job group, reaches the jobs of streaming
     * queries `body` starts: their execution thread inherits the caller's
-    * local properties and replaces only the job group. The status store
-    * is listener-fed (async), so the count is read until it is nonzero
-    * and stable across three consecutive 300 ms reads (a single quiet
-    * interval can race a stalled listener bus), bounded at 15 s.
+    * local properties and replaces only the job group. A job's start event
+    * is posted before the job can finish, so once the listener bus has
+    * delivered what was posted, the count is exact — zero included.
     */
   def jobsIn(tag: String)(body: => Unit): Int = {
     val sc = spark.sparkContext
     sc.addJobTag(tag)
     try body finally sc.removeJobTag(tag)
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    var stable = 0
-    var last = -1
-    while (stable < 3 && System.nanoTime() < deadline) {
-      val n = sc.statusTracker.getJobIdsForTag(tag).length
-      if (n > 0 && n == last) stable += 1 else stable = 0
-      last = n
-      Thread.sleep(300)
-    }
-    last
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.statusTracker.getJobIdsForTag(tag).length
   }
 }

@@ -395,6 +395,26 @@ class StreamSpec extends AnyFunSuite {
     assertMonotoneCounts(stateSnaps.toSeq)
   }
 
+  test("fourcliqueMaintainReplayBatch: non-canonical pair orientation returns all 6 cliques") {
+    // K5 + a K4 on {4,5,6,7}; the same undirected edges with a seeded half
+    // written (b, a) must be staged canonical — the rank attribution and
+    // the closing-edge probe assume a < b
+    val canonical = (for { a <- 1L to 5L; b <- a + 1 to 5L } yield (a, b)) ++
+      Seq((4L, 6L), (4L, 7L), (5L, 6L), (5L, 7L), (6L, 7L))
+    val rnd = new scala.util.Random(7)
+    val flip = rnd.shuffle(canonical.indices.toList).take(canonical.size / 2).toSet
+    val mixed = canonical.zipWithIndex.map { case ((a, b), i) =>
+      if (flip(i)) (b, a) else (a, b) }
+    assert(mixed.count { case (a, b) => a > b } == canonical.size / 2)
+    val got = StreamOps.fourcliqueMaintainReplayBatch(spark, mixed.toDF("a", "b"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val batch = graft.graph.GraphOps.fourCliqueCounts(canonical.toDF("a", "b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    // each clique has 4 vertices: the per-vertex counts sum to 4 × 6
+    assert(batch.values.sum == 24L, s"canonical census $batch")
+    assert(got == batch, s"mixed-orientation end state $got != batch census $batch")
+  }
+
   test("fourcliqueMaintainReplayBatch: Bloom-pruned shuffle path equals the broadcast path") {
     // graft.quadBroadcastMax=0 forces the past-the-gate geometry (shuffled
     // existence probes pre-pruned by the broadcast edge Bloom) on the same
