@@ -28,13 +28,20 @@ final case class Response(seqNo: Long, responseTag: Long, worker: Worker,
   * per-request shared memory disappear; Spark's scheduler replaces
   * thread-per-request dispatch, so there is no 100-request lifetime cap.
   *
+  * Writes (ops 1/2) of a matrix payload run no Spark job: its rows are
+  * already in driver memory, so the catalog writes them as one parquet file
+  * and puts the published version straight into its read cache, as the
+  * reference's primary server writes a graph from its own memory
+  * (`primary_server.c:139-152`).
+  *
   * Reads (ops 3/4) are size-gated. A version at or under Spark's
-  * broadcast threshold is collected by one job, kept by the catalog until
-  * it is superseded, evicted or vacuumed, and traversed on the driver, as
-  * the reference's secondary server walks its in-memory adjacency matrix of
-  * at most 30×30 cells (`#define N 30`, `secondary_server.c:94-213`); a
-  * larger version runs the distributed operators. Both paths return the
-  * same rows in the same order.
+  * broadcast threshold is kept by the catalog on the driver (written
+  * through by the write that published it, or collected by one job on
+  * first read) until it is superseded, evicted or vacuumed, and traversed
+  * there, as the reference's secondary server walks its in-memory adjacency
+  * matrix of at most 30×30 cells (`#define N 30`,
+  * `secondary_server.c:94-213`); a larger version runs the distributed
+  * operators. Both paths return the same rows in the same order.
   *
   * Concurrency model: requests may run on any number of threads. Reads
   * take no lock: a published version never changes, and a read resolves
@@ -74,9 +81,9 @@ final class GraphEngine(spark: SparkSession, val catalog: GraphCatalog) {
   /** Ops 3/4 on the latest version of `name`. At or under
     * `spark.sql.autoBroadcastJoinThreshold`, Spark's own rule for "small
     * enough to ship whole", the version is traversed on the driver: the
-    * catalog collects it once per version and keeps it, so a repeated read
-    * of an unchanged version runs no Spark job. Above it, or with it at -1,
-    * the distributed operator runs.
+    * catalog keeps it from the write that published it, or collects it
+    * once, so a read of an unchanged version runs no Spark job after that.
+    * Above it, or with it at -1, the distributed operator runs.
     */
   private def traverse(name: String, bfs: Boolean, start: Long): DataFrame =
     catalog.latestForTraversal(name) match { // throws GraphNotFound: add-before-read rule

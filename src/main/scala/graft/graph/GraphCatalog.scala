@@ -1,11 +1,19 @@
 package graft.graph
 
 import java.io.FileNotFoundException
+import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption}
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, Options, Path}
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 
 final class GraphNotFoundException private (message: String, marker: Boolean)
@@ -37,9 +45,15 @@ final class GraphAlreadyExistsException(name: String)
   * readers-writers semaphores (`primary_server.c:138-153`,
   * `secondary_server.c:264-294`). Here a version is immutable once
   * published, so readers take no lock at all:
-  *  - A write runs its Spark job into a unique `_staging-<uuid>` directory
-  *    under the graph (names starting with `_` are invisible to readers and
-  *    to Spark), with no lock held.
+  *  - A write fills a unique `_staging-<uuid>` directory under the graph
+  *    (names starting with `_` are invisible to readers and to Spark), with
+  *    no lock held. A payload whose rows are already in driver memory (its
+  *    optimized plan is a `LocalRelation` of at most
+  *    `spark.sql.autoBroadcastJoinThreshold` bytes, on a catalog that is not
+  *    bucketed: every engine add/modify of a matrix) is written by the
+  *    driver as ONE parquet file and runs no Spark job, as the reference's
+  *    primary server writes a graph from its own memory
+  *    (`primary_server.c:139-152`); any other payload runs a Spark write.
   *  - It then publishes under a per-graph writer lock shared by every
   *    catalog in the JVM — the reference's writer semaphore, held only for
   *    one directory listing and one rename. Under it the write's
@@ -64,7 +78,11 @@ final class GraphAlreadyExistsException(name: String)
   * Driver-side traversal reads ([[latestForTraversal]]) keep the collected
   * graph of each name's latest version, keyed by its chain's paths and
   * `_SUCCESS` modification times and bounded by Spark's broadcast threshold,
-  * so a repeated read of an unchanged version runs no Spark job.
+  * so a repeated read of an unchanged version runs no Spark job. A full
+  * snapshot written from the driver goes into that cache as it publishes
+  * (write-through), so the first read after an engine add/modify runs none
+  * either. An entry that lands after a newer version published never
+  * serves: its key no longer matches the latest chain.
   *
   * At scale the base dir is any Hadoop-compatible FS (HDFS/S3); edge tables
   * are partitioned data, never driver-resident.
@@ -88,10 +106,16 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
   private def fs = new Path(baseDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Renames without overwrite, which `FileSystem.rename` cannot promise
-    * (it may move the source INTO an existing directory).
-    */
+  /** Renames without overwrite on file systems other than the local one. */
   private lazy val files = FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
+
+  /** On the local FS, driver-side file writes and renames go through
+    * `java.nio`: Hadoop's local FS forks `chmod` to create a file (~7 ms)
+    * and `readlink` to rename one (~14 ms).
+    */
+  private lazy val onLocalFs = fs.getUri.getScheme == "file"
+
+  private def nio(p: Path): java.nio.file.Path = Paths.get(p.toUri)
 
   private def graphDir(name: String): Path = fs.makeQualified(new Path(s"$baseDir/$name"))
 
@@ -169,15 +193,23 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     // and so run no footer-inference job
     val typed = edges.select(col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    // the read path's gate: rows already on the driver, small enough to ship whole
+    val local = typed.queryExecution.optimizedPlan match {
+      case r: LocalRelation if buckets.isEmpty && limit >= 0 && r.stats.sizeInBytes <= limit =>
+        Some(r.data.toArray)
+      case _ => None
+    }
     try {
-      buckets match {
-        case Some(n) =>
+      (local, buckets) match {
+        case (Some(rows), _) => writeFromDriver(staging, rows)
+        case (None, Some(n)) =>
           val t = tableName(name, s"staging_$id")
           try typed.write.option("path", staging.toString)
             .bucketBy(n, "src").sortBy("src")
             .format("parquet").saveAsTable(t)
           finally spark.sql(s"DROP TABLE IF EXISTS $t") // external: the files stay
-        case None =>
+        case (None, None) =>
           typed.write.mode("errorifexists").parquet(staging.toString)
       }
       val published = publish(name, staging, prefix, admit)
@@ -188,8 +220,45 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
         spark.sql(s"CREATE TABLE $t (src BIGINT, dst BIGINT) USING parquet " +
           s"CLUSTERED BY (src) SORTED BY (src) INTO $n BUCKETS LOCATION '$at'")
       }
+      for (v <- published; rows <- local if !delta) writeThrough(name, v, rows, limit)
       published
     } finally fs.delete(staging, true) // a published staging dir no longer exists
+  }
+
+  /** Writes `(src, dst)` rows from driver memory as the one parquet file of
+    * `dir` (`optional int64` columns, so null endpoints survive), then its
+    * `_SUCCESS` marker. Runs no Spark job.
+    */
+  private def writeFromDriver(dir: Path, rows: Array[InternalRow]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = new Path(dir, GraphCatalog.DriverFile)
+    val target =
+      if (onLocalFs) { Files.createDirectories(nio(dir)); new LocalOutputFile(nio(file)) }
+      else HadoopOutputFile.fromPath(file, conf)
+    val schema = GraphCatalog.EdgeFileSchema
+    val out = ExampleParquetWriter.builder(target).withConf(conf).withType(schema).build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(schema)
+      for (c <- 0 to 1 if !r.isNullAt(c)) g.add(c, r.getLong(c))
+      out.write(g)
+    } finally out.close()
+    val success = new Path(dir, "_SUCCESS")
+    if (onLocalFs) Files.createFile(nio(success)) else fs.create(success, false).close()
+  }
+
+  /** Puts the published full snapshot `v`, whose rows are `rows`, into the
+    * read cache, keyed as a read of it would be and sized by the planner's
+    * rule for a file relation: file bytes × `spark.sql.sources.fileCompressionFactor`.
+    */
+  private def writeThrough(name: String, v: Long, rows: Array[InternalRow], limit: Long): Unit = {
+    val path = versionPath(name, "v", v)
+    val at = fs.getFileStatus(new Path(path, "_SUCCESS")).getModificationTime
+    val bytes = (fs.getFileStatus(new Path(path, GraphCatalog.DriverFile)).getLen *
+      spark.sessionState.conf.fileCompressionFactor).toLong
+    if (bytes <= limit) {
+      val g = GraphOps.LocalGraph(spark, rows.length)(rows(_).isNullAt(_), rows(_).getLong(_))
+      put(name, Cached(Seq((path, at)), g, bytes), limit)
+    }
   }
 
   private def versionPath(name: String, prefix: String, v: Long): Path =
@@ -203,15 +272,31 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
         if (!admit(committedNewestFirst(vs).nextOption().map(_.entry.version))) None
         else {
           val v = vs.lastOption.fold(1L)(_.version + 1)
-          val renamed =
-            try { files.rename(staging, versionPath(name, prefix, v), Options.Rename.NONE); true }
-            catch { case _: FileAlreadyExistsException => false }
-          if (renamed) Some(v) else attempt()
+          if (moveNew(staging, versionPath(name, prefix, v))) Some(v) else attempt()
         }
       }
       attempt()
     }
   }
+
+  /** Renames `src` to `dst` unless `dst` exists; false when it does. On the
+    * local FS this is one `rename(2)` (`Files.move` with `ATOMIC_MOVE`).
+    * `rename(2)` would replace an EMPTY directory, but a target here is never
+    * one: [[publish]] picks a number that no directory had when it listed
+    * under the writer lock, and a number is only ever taken by renaming a
+    * staging directory, which holds at least `_SUCCESS`. Other schemes
+    * rename through `FileContext` without overwrite, which `FileSystem.rename`
+    * cannot promise (it may move the source INTO an existing directory).
+    */
+  private[graft] def moveNew(src: Path, dst: Path): Boolean =
+    if (onLocalFs) {
+      val to = nio(dst)
+      // FileAlreadyExists, DirectoryNotEmpty, or rename(2)'s ENOTEMPTY
+      try { Files.move(nio(src), to, StandardCopyOption.ATOMIC_MOVE); true }
+      catch { case _: FileSystemException if Files.exists(to) => false }
+    } else
+      try { files.rename(src, dst, Options.Rename.NONE); true }
+      catch { case _: FileAlreadyExistsException => false }
 
   /** op 1 — AddGraph (reference `primary_server.c:86-179`). The check
     * before the write fails fast; the one at publish decides.
@@ -411,8 +496,10 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     * "small enough to ship whole" also bounds the cache: the entries' sizes
     * sum to at most the threshold, read on every call, and the least
     * recently used go first. A repeated read of an unchanged version runs no
-    * Spark job; a miss collects exactly the resolved chain (one job). No
-    * lock is held across that job, so concurrent misses may both collect.
+    * Spark job, nor does the first read of a version written from the
+    * driver (write-through); a miss collects exactly the resolved
+    * chain (one job). No lock is held across that job, so concurrent misses
+    * may both collect.
     */
   def latestForTraversal(name: String): Either[DataFrame, GraphOps.LocalGraph] = {
     val chain = latestChain(name)
@@ -429,15 +516,17 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
       if (limit < 0 || bytes > limit) Left(edges)
       else {
         val g = GraphOps.LocalGraph.collect(edges)
-        cache.synchronized {
-          evict(name)
-          cache.put(name, Cached(key, g, bytes.toLong))
-          cachedBytes += bytes.toLong
-          trim(limit)
-        }
+        put(name, Cached(key, g, bytes.toLong), limit)
         Right(g)
       }
     }
+  }
+
+  private def put(name: String, c: Cached, limit: Long): Unit = cache.synchronized {
+    evict(name)
+    cache.put(name, c)
+    cachedBytes += c.bytes
+    trim(limit)
   }
 
   private def evict(name: String): Unit = cache.synchronized {
@@ -457,6 +546,15 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
 object GraphCatalog {
   /** Directory-name prefix of unpublished writes. */
   private val StagingPrefix = "_staging-"
+
+  /** The one data file of a driver-written version. */
+  private val DriverFile = "part-00000.parquet"
+
+  /** The parquet schema of a driver-written version: Spark reads it back as
+    * `src BIGINT, dst BIGINT`, both nullable.
+    */
+  private val EdgeFileSchema: MessageType = MessageTypeParser.parseMessageType(
+    "message spark_schema { optional int64 src; optional int64 dst; }")
 
   private val writerLocks = new ConcurrentHashMap[String, AnyRef]()
 

@@ -458,13 +458,15 @@ object GraphOps {
       .orderBy("vertex")
   }
 
-  /** An edge table collected to the driver by ONE Spark job, in CSR form
-    * over primitive arrays: the input of [[bfsLevelsLocal]] and
-    * [[dfsLeavesLocal]], the driver-side twins of [[bfsLevels]] and
-    * [[dfsLeaves]] for graphs at the reference's own scale. Its secondary
-    * server walks an in-memory adjacency matrix of at most 30×30 cells
-    * (`#define N 30`, `secondary_server.c:94-213`), where the distributed
-    * traversal pays two Spark jobs per level for a few dozen edges.
+  /** An edge table on the driver in CSR form over primitive arrays,
+    * collected by ONE Spark job or built from rows already in driver memory
+    * (a version the catalog wrote from the driver): the input of
+    * [[bfsLevelsLocal]] and [[dfsLeavesLocal]], the driver-side twins of
+    * [[bfsLevels]] and [[dfsLeaves]] for graphs at the reference's own
+    * scale. Its secondary server walks an in-memory adjacency matrix of at
+    * most 30×30 cells (`#define N 30`, `secondary_server.c:94-213`), where
+    * the distributed traversal pays two Spark jobs per level for a few
+    * dozen edges.
     * Callers gate on size; nothing here bounds driver memory.
     *
     * Null endpoints keep the distributed operators' join semantics: a
@@ -491,26 +493,31 @@ object GraphOps {
   object LocalGraph {
     def collect(edges: DataFrame): LocalGraph = {
       val rows = edges.select(col("src").cast("long"), col("dst").cast("long")).collect()
+      apply(edges.sparkSession, rows.length)(rows(_).isNullAt(_), rows(_).getLong(_))
+    }
+
+    /** The CSR form of `n` edges: edge `i`'s `src` is column 0 and its
+      * `dst` column 1 of `isNull(i, c)` / `end(i, c)`.
+      */
+    private[graph] def apply(spark: SparkSession, n: Int)(isNull: (Int, Int) => Boolean,
+                                                   end: (Int, Int) => Long): LocalGraph = {
       val ends = Array.newBuilder[Long]
-      rows.foreach { r =>
-        if (!r.isNullAt(0)) ends += r.getLong(0)
-        if (!r.isNullAt(1)) ends += r.getLong(1)
-      }
+      for (i <- 0 until n; c <- 0 to 1 if !isNull(i, c)) ends += end(i, c)
       val all = ends.result()
       java.util.Arrays.sort(all)
       var k = 0 // distinct prefix of the sorted endpoints, compacted in place
       for (v <- all if k == 0 || all(k - 1) != v) { all(k) = v; k += 1 }
       val ids = java.util.Arrays.copyOf(all, k)
-      def idx(r: Row, c: Int): Int =
-        if (r.isNullAt(c)) -1 else java.util.Arrays.binarySearch(ids, r.getLong(c))
-      val si = rows.map(idx(_, 0))
-      val di = rows.map(idx(_, 1))
+      def idx(i: Int, c: Int): Int =
+        if (isNull(i, c)) -1 else java.util.Arrays.binarySearch(ids, end(i, c))
+      val si = Array.tabulate(n)(idx(_, 0))
+      val di = Array.tabulate(n)(idx(_, 1))
       val outStart = new Array[Int](k + 1)
       val nullOut = new Array[Boolean](k)
       val nullNbr = new Array[Boolean](k)
       // symmetrized pairs as one sortable key a·k + b (k < 2^31, so exact)
       val pairs = Array.newBuilder[Long]
-      for (i <- rows.indices) {
+      for (i <- 0 until n) {
         val s = si(i)
         val d = di(i)
         if (s >= 0 && d >= 0) {
@@ -523,7 +530,7 @@ object GraphOps {
       for (v <- 0 until k) outStart(v + 1) += outStart(v)
       val outDst = new Array[Int](outStart(k))
       val fill = outStart.clone()
-      for (i <- rows.indices if si(i) >= 0 && di(i) >= 0) {
+      for (i <- 0 until n if si(i) >= 0 && di(i) >= 0) {
         outDst(fill(si(i))) = di(i)
         fill(si(i)) += 1
       }
@@ -532,7 +539,7 @@ object GraphOps {
       val degree = nullNbr.map(b => if (b) 1 else 0)
       for (j <- keys.indices if j == 0 || keys(j - 1) != keys(j))
         degree((keys(j) / k).toInt) += 1
-      new LocalGraph(edges.sparkSession, ids, outStart, outDst, nullOut, degree)
+      new LocalGraph(spark, ids, outStart, outDst, nullOut, degree)
     }
   }
 

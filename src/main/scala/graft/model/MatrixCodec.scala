@@ -1,6 +1,8 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Codec for the reference's on-disk graph format: one text file per graph,
   * first line `n`, then `n` rows of `n` whitespace-separated ints
@@ -139,11 +141,18 @@ object MatrixCodec {
     sb.toString
   }
 
-  /** Edge list → DataFrame(src BIGINT, dst BIGINT). */
-  def edgesDF(spark: SparkSession, edges: Seq[(Long, Long)]): DataFrame = {
-    import spark.implicits._
-    edges.toDF("src", "dst")
-  }
+  /** The schema of [[edgesDF]]: what the tuple encoder gives a
+    * `Seq[(Long, Long)]` named `src`, `dst`.
+    */
+  private val EdgeSchema: StructType = StructType(Seq(
+    StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false)))
+
+  /** Edge list → DataFrame(src BIGINT, dst BIGINT), a local relation built
+    * from rows: no encoder is derived per call.
+    */
+  def edgesDF(spark: SparkSession, edges: Seq[(Long, Long)]): DataFrame =
+    spark.createDataFrame(edges.map { case (s, d) => Row(s, d) }.asJava, EdgeSchema)
 
   /** Read a matrix-text file into an edge DataFrame. Files in this format
     * are small by definition; real graphs arrive as parquet edge tables.

@@ -12,10 +12,9 @@ import SparkTestSession._
   */
 class EngineSpec extends AnyFunSuite {
 
-  private def freshEngine(): GraphEngine = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_engine_").toString
-    new GraphEngine(spark, new GraphCatalog(spark, tmp))
-  }
+  private def freshEngine(
+      dir: String = java.nio.file.Files.createTempDirectory("graft_engine_").toString): GraphEngine =
+    new GraphEngine(spark, new GraphCatalog(spark, dir))
 
   // The reference's live fixtures (FIXTURES.md §2) as session-script text.
   private val script =
@@ -242,16 +241,23 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("small-graph reads: one Spark job on the driver path; threshold -1 takes the distributed path with the same rows and errors") {
-    val engine = freshEngine()
+    val dir = java.nio.file.Files.createTempDirectory("graft_engine_").toString
+    val engine = freshEngine(dir)
     engine.execute(GraphRequest(1, Op.AddGraph, "GS.txt"),
       GraphPayload(undirected((1, 2), (2, 3), (2, 4), (4, 5))))
-    def read(seq: Long, op: Op, v: Long) =
-      engine.execute(GraphRequest(seq, op, "GS.txt"), StartVertex(v)).result.get.collect().toSeq
+    def readOn(e: GraphEngine)(seq: Long, op: Op, v: Long) =
+      e.execute(GraphRequest(seq, op, "GS.txt"), StartVertex(v)).result.get.collect().toSeq
+    val read = readOn(engine) _
     var bfs, dfs = Seq.empty[org.apache.spark.sql.Row]
-    // the first read collects the version; reads of it after that run none
-    assert(jobsIn("engine-bfs-local") { bfs = read(2, Op.BfsLevels, 2) } == 1)
-    assert(jobsIn("engine-dfs-local") { dfs = read(3, Op.DfsLeaves, 2) } == 0)
-    assert(jobsIn("engine-bfs-cached") { assert(read(3, Op.BfsLevels, 2) == bfs) } == 0)
+    // the add wrote the version through to the read cache
+    assert(jobsIn("engine-bfs-written-through") { bfs = read(2, Op.BfsLevels, 2) } == 0)
+    // a second catalog over the same directory starts cold: its first read
+    // collects the version, its reads after that run none
+    val cold = readOn(freshEngine(dir)) _
+    assert(jobsIn("engine-bfs-local") { assert(cold(2, Op.BfsLevels, 2) == bfs) } == 1)
+    assert(jobsIn("engine-dfs-local") { dfs = cold(3, Op.DfsLeaves, 2) } == 0)
+    assert(jobsIn("engine-bfs-cached") { assert(cold(3, Op.BfsLevels, 2) == bfs) } == 0)
+    assert(jobsIn("engine-dfs-written-through") { assert(read(3, Op.DfsLeaves, 2) == dfs) } == 0)
     assert(bfs.map(r => (r.getLong(0), r.getLong(1))) ==
       Seq((2L, 0L), (1L, 1L), (3L, 1L), (4L, 1L), (5L, 2L)))
     assert(dfs.map(_.getLong(0)) == Seq(1L, 3L, 5L))
@@ -305,6 +311,8 @@ class EngineSpec extends AnyFunSuite {
       engine.execute(GraphRequest(3, Op.DfsLeaves, name), StartVertex(1)).result.get.collect()
       ()
     }
+    // the adds wrote both through
+    assert(Seq(read("GA.txt"), read("GB.txt")) == Seq(0, 0))
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     // room for either graph, not for both
@@ -312,5 +320,34 @@ class EngineSpec extends AnyFunSuite {
     try assert(Seq(read("GA.txt"), read("GB.txt"), read("GA.txt")) == Seq(1, 1, 1))
     finally spark.conf.set(key, prev)
     assert(Seq(read("GA.txt"), read("GB.txt"), read("GA.txt")) == Seq(0, 1, 0))
+  }
+
+  test("engine writes: add and modify run no Spark job; threshold -1 takes the Spark write with the same rows") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    /** Jobs of an add and a modify, and `load`'s rows after each. */
+    def writes(tag: String) = {
+      val engine = freshEngine()
+      def rows() = engine.catalog.load("GW.txt").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      val add = jobsIn(s"$tag-add") {
+        engine.execute(GraphRequest(1, Op.AddGraph, "GW.txt"), GraphPayload(undirected((1, 2), (2, 3))))
+      }
+      val added = rows()
+      val modify = jobsIn(s"$tag-modify") {
+        engine.execute(GraphRequest(2, Op.ModifyGraph, "GW.txt"), GraphPayload(MatrixCodec.edgesDF(spark,
+          MatrixCodec.parseMatrixText("3\n0 1 1\n1 0 0\n1 0 0")._2)))
+      }
+      (add, modify, added, rows())
+    }
+    val (add, modify, added, modified) = writes("engine-write-driver")
+    assert((add, modify) == (0, 0))
+    assert(added == Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L)))
+    assert(modified == Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L)))
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (sparkAdd, sparkModify, sparkAdded, sparkModified) = writes("engine-write-spark")
+      assert(sparkAdd >= 1 && sparkModify >= 1)
+      assert((sparkAdded, sparkModified) == (added, modified))
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -81,4 +81,18 @@ class ModelSpec extends AnyFunSuite {
         s"wrong failure: ${e.getMessage}")
     }
   }
+
+  test("edgesDF keeps the tuple encoder's schema and builds a local relation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import SparkTestSession.spark
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 1L))
+    val df = MatrixCodec.edgesDF(spark, pairs)
+    assert(df.schema == pairs.toDF("src", "dst").schema)
+    assert(df.schema == StructType(Seq(StructField("src", LongType, nullable = false),
+      StructField("dst", LongType, nullable = false))))
+    assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == pairs)
+  }
 }
