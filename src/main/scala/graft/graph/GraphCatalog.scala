@@ -15,6 +15,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
+import graft.plans.Materialize
 
 final class GraphNotFoundException private (message: String, marker: Boolean)
   extends IllegalStateException(message) {
@@ -193,10 +194,9 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     // and so run no footer-inference job
     val typed = edges.select(col("src").cast("bigint").as("src"),
       col("dst").cast("bigint").as("dst"))
-    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
     // the read path's gate: rows already on the driver, small enough to ship whole
     val local = typed.queryExecution.optimizedPlan match {
-      case r: LocalRelation if buckets.isEmpty && limit >= 0 && r.stats.sizeInBytes <= limit =>
+      case r: LocalRelation if buckets.isEmpty && Materialize.small(typed) =>
         Some(r.data.toArray)
       case _ => None
     }
@@ -220,7 +220,7 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
         spark.sql(s"CREATE TABLE $t (src BIGINT, dst BIGINT) USING parquet " +
           s"CLUSTERED BY (src) SORTED BY (src) INTO $n BUCKETS LOCATION '$at'")
       }
-      for (v <- published; rows <- local if !delta) writeThrough(name, v, rows, limit)
+      for (v <- published; rows <- local if !delta) writeThrough(name, v, rows)
       published
     } finally fs.delete(staging, true) // a published staging dir no longer exists
   }
@@ -250,14 +250,15 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     * read cache, keyed as a read of it would be and sized by the planner's
     * rule for a file relation: file bytes × `spark.sql.sources.fileCompressionFactor`.
     */
-  private def writeThrough(name: String, v: Long, rows: Array[InternalRow], limit: Long): Unit = {
+  private def writeThrough(name: String, v: Long, rows: Array[InternalRow]): Unit = {
     val path = versionPath(name, "v", v)
     val at = fs.getFileStatus(new Path(path, "_SUCCESS")).getModificationTime
     val bytes = (fs.getFileStatus(new Path(path, GraphCatalog.DriverFile)).getLen *
       spark.sessionState.conf.fileCompressionFactor).toLong
-    if (bytes <= limit) {
+    if (Materialize.fits(spark, bytes)) {
       val g = GraphOps.LocalGraph(spark, rows.length)(rows(_).isNullAt(_), rows(_).getLong(_))
-      put(name, Cached(Seq((path, at)), g, bytes), limit)
+      put(name, Cached(Seq((path, at)), g, bytes),
+        spark.sessionState.conf.autoBroadcastJoinThreshold)
     }
   }
 
@@ -512,10 +513,10 @@ final class GraphCatalog(spark: SparkSession, baseDir: String,
     }
     hit.map(c => Right(c.graph)).getOrElse {
       val edges = loadChain(name, chain.map(_.entry))
-      val bytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (limit < 0 || bytes > limit) Left(edges)
+      if (!Materialize.small(edges)) Left(edges)
       else {
         val g = GraphOps.LocalGraph.collect(edges)
+        val bytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
         put(name, Cached(key, g, bytes.toLong), limit)
         Right(g)
       }

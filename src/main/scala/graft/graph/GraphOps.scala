@@ -9,6 +9,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
+import graft.pipeline.RuntimeFilters.bloomPrune
+import graft.plans.Materialize
+
 /** Graph operators with the reference's observable semantics (SURVEY.md §2
   * Table A), re-expressed as distributed dataflow.
   *
@@ -756,15 +759,8 @@ object GraphOps {
     * name is unique across the join.
     */
   private[graft] def wprRound(verts: DataFrame, norm: DataFrame, r: DataFrame,
-                              resetProb: Double,
-                              probe: DataFrame => DataFrame = identity): DataFrame = {
-    // probe = the gated vertex broadcast ([[vertexProbe]], r19): the
-    // V-sized rank vector broadcasts into the edge join and the ≤V-row
-    // contribution table into the reset left join, so the persisted edge
-    // table never re-shuffles per round — the checkpointed rank side has
-    // no stats and never auto-broadcast (AQE converted only after the
-    // shuffle write)
-    val contrib = probe(r.select(col("vertex").as("rv"), col("r").as("rr")))
+                              resetProb: Double): DataFrame = {
+    val contrib = r.select(col("vertex").as("rv"), col("r").as("rr"))
       .join(norm, col("rv") === col("src"))
       .groupBy(col("dst").as("vertex"))
       .agg(sum(col("rr") * col("p")).as("s"))
@@ -802,7 +798,7 @@ object GraphOps {
     * aggregate. Factored out so PlanSpec pins the production level body.
     */
   private[graft] def katzLevel(e: DataFrame, x: DataFrame): DataFrame =
-    // NOT vertex-probed (r19): the gated frontier broadcast was tried
+    // NOT broadcast by hint (r19): a gated frontier broadcast was tried
     // here and MEASURED a +19% regression (4.35 → 5.17 s warm reps at
     // sf0.1) — at 4 levels the per-level broadcast build sits on the
     // critical path longer than the sort it removes; the 10-round
@@ -1189,10 +1185,10 @@ object GraphOps {
     * round-`radius` register reads round-(radius−1) state only along
     * its OUT-edges — B_r(v) = {v} ∪ ⋃_{v→u} B_{r−1}(u). So the LAST
     * round joins the marked out-edges alone (a pure pushdown predicate
-    * — no reachability pass) and gated-broadcasts that parameter-scale
-    * edge slice, streaming the full state map-side instead of
-    * shuffling V blob rows; its merge aggregates |outN(marked)| rows
-    * instead of E. Kept registers read exactly the same inputs, so
+    * — no reachability pass) and materializes that parameter-scale edge
+    * slice, which broadcasts within the broadcast threshold, streaming
+    * the full state map-side instead of shuffling V blob rows; its
+    * merge aggregates |outN(marked)| rows instead of E. Kept registers read exactly the same inputs, so
     * every shipped value is bit-identical. (The FULL halo prune — BFS
     * distances filtering every round — was measured 20% SLOWER at
     * sf0.1: radius−1 extra join rounds plus per-round semi-joins
@@ -1235,10 +1231,7 @@ object GraphOps {
       val lastRound = r == radius
       // final round: only marked registers are read afterwards, so only
       // the marked out-edges and marked self-rows enter the merge
-      val eR = if (lastRound) {
-        val me = e.filter(col("src") < outputBelow)
-        vertexProbe(me)(me)
-      } else e
+      val eR = if (lastRound) Materialize(e.filter(col("src") < outputBelow)) else e
       val sSelf =
         if (lastRound) state.filter(col("v") < outputBelow) else state
       state = state.join(eR, state("v") === eR("dst"))
@@ -1422,15 +1415,11 @@ object GraphOps {
         val v = row.getLong(0)
         trace += ((r.toLong, v, e))
         if (r < rounds) {
-          val keep = deg.filter(col("d") * lit(v) > lit(2L) * lit(e)).select("v")
-            .localCheckpoint(true) // feeds both endpoint semi-joins
-          // gated vertex broadcast ([[vertexProbe]] pattern, r19): the
-          // ≤V-row keep set probes map-side into both endpoint semi-joins
-          val kp =
-            if (v <= vertexBroadcastMax) (d: DataFrame) => broadcast(d)
-            else identity[DataFrame] _
-          p = p.join(kp(keep.withColumnRenamed("v", "a")), Seq("a"), "left_semi")
-            .join(kp(keep.withColumnRenamed("v", "b")), Seq("b"), "left_semi")
+          // feeds both endpoint semi-joins, broadcast while within the
+          // threshold
+          val keep = Materialize(deg.filter(col("d") * lit(v) > lit(2L) * lit(e)).select("v"))
+          p = p.join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
+            .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
             .localCheckpoint(true)
         }
         r += 1
@@ -1498,9 +1487,9 @@ object GraphOps {
     * three edges, so the surviving edge set keeps the a < b contract.
     */
   private[graft] def trussSupportRound(p: DataFrame): DataFrame = {
-    val o = orientByDegree(p, pairDegrees(p).localCheckpoint(true))
-      .localCheckpoint(true) // feeds all three sides of the triangle join
-    orientedTriangles(o, censusProbe(o), censusBloomPrune(o, Seq("u", "v")))
+    // feeds all three sides of the triangle join
+    val o = Materialize(orientByDegree(p, pairDegrees(p).localCheckpoint(true)))
+    orientedTriangles(o, bloomPrune(o, Seq(col("u"), col("v"))))
       .select(explode(array(
         struct(least(col("u"), col("v")).as("x"), greatest(col("u"), col("v")).as("y")),
         struct(least(col("u"), col("w")).as("x"), greatest(col("u"), col("w")).as("y")),
@@ -1567,12 +1556,10 @@ object GraphOps {
       val e = edges.select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"))
         .localCheckpoint(true)
-      var lab = e.select(col("src").as("vertex")).distinct()
-        .withColumn("label", col("vertex"))
-        .localCheckpoint(true)
-      val probe = vertexProbe(lab) // gate decided once — V is fixed
+      var lab = Materialize(e.select(col("src").as("vertex")).distinct()
+        .withColumn("label", col("vertex")))
       for (_ <- 1 to rounds) {
-        lab = lpaRound(e, lab, probe).localCheckpoint(true)
+        lab = Materialize(lpaRound(e, lab))
       }
       lab
     }.orderBy("vertex")
@@ -1600,17 +1587,14 @@ object GraphOps {
   def modularity(edges: DataFrame, communities: DataFrame): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val lab = communities.select(col("vertex").cast("long").as("v"),
-      col("label").cast("long").as("c"))
-      .localCheckpoint(true) // feeds both endpoint joins + the gate count
-    // gated vertex broadcast ([[vertexProbe]], r19): the V-sized label
-    // map broadcasts into both endpoint joins — the edge table never
-    // shuffles for them
-    val probe = vertexProbe(lab)
+    // feeds both endpoint joins: the V-sized label map broadcasts into
+    // them while within the threshold, so the edge table never shuffles
+    val lab = Materialize(communities.select(col("vertex").cast("long").as("v"),
+      col("label").cast("long").as("c")))
     val es = e
-      .join(probe(lab.select(col("v"), col("c").as("c_src"))), col("src") === col("v"))
+      .join(lab.select(col("v"), col("c").as("c_src")), col("src") === col("v"))
       .drop("v")
-      .join(probe(lab.select(col("v"), col("c").as("c_dst"))), col("dst") === col("v"))
+      .join(lab.select(col("v"), col("c").as("c_dst")), col("dst") === col("v"))
       .drop("v")
     val perC = es.groupBy("c_src").agg(
       count(lit(1)).cast("long").as("deg_c"),
@@ -1668,30 +1652,26 @@ object GraphOps {
       val e = edges.select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"))
         .localCheckpoint(true)
-      val deg = e.groupBy(col("src").as("vertex"))
-        .agg(count(lit(1)).cast("long").as("deg"))
-        .localCheckpoint(true)
+      val deg = Materialize(e.groupBy(col("src").as("vertex"))
+        .agg(count(lit(1)).cast("long").as("deg")))
       val m2 = broadcast(deg.agg(sum("deg").cast("long").as("m2")))
-      var comm = deg.select(col("vertex"), col("vertex").as("c"))
-        .localCheckpoint(true)
-      val probe = vertexProbe(deg) // gate decided once — V is fixed
+      var comm = Materialize(deg.select(col("vertex"), col("vertex").as("c")))
       for (_ <- 1 to rounds)
-        comm = louvainMoveRound(e, deg, m2, comm, probe).localCheckpoint(true)
+        comm = Materialize(louvainMoveRound(e, deg, m2, comm))
       comm.select(col("vertex"), col("c").as("label"))
     }.orderBy("vertex")
   }
 
   /** One synchronous Louvain move round — see [[louvainBounded]]. */
   private[graft] def louvainMoveRound(e: DataFrame, deg: DataFrame, m2: DataFrame,
-                                      comm: DataFrame,
-                                      probe: DataFrame => DataFrame = identity): DataFrame = {
-    // probe = gated vertex broadcast ([[vertexProbe]], r19): comm/deg/tot
-    // are all ≤V-row maps — broadcast them into the edge join and the
-    // candidate-scoring joins so neither the edge table nor the
+                                      comm: DataFrame): DataFrame = {
+    // comm and deg are ≤V-row maps (materialized by the caller): within
+    // the threshold they broadcast into the edge join and the
+    // candidate-scoring joins, so neither the edge table nor the
     // edge-bounded candidate set shuffles for a V-sized side
-    val tot = probe(comm).join(deg, "vertex")
+    val tot = comm.join(deg, "vertex")
       .groupBy("c").agg(sum("deg").cast("long").as("tot_c"))
-    val k = e.join(probe(comm.select(col("vertex").as("dst"), col("c"))), "dst")
+    val k = e.join(comm.select(col("vertex").as("dst"), col("c")), "dst")
       .groupBy(col("src").as("vertex"), col("c"))
       .agg(count(lit(1)).cast("long").as("k_vc"))
     // the stay candidate must exist even when v has no intra-community
@@ -1700,9 +1680,9 @@ object GraphOps {
       .unionByName(comm.select(col("vertex"), col("c"), lit(0L).as("k_vc")))
       .groupBy("vertex", "c").agg(max("k_vc").as("k_vc"))
     cand
-      .join(probe(comm.select(col("vertex"), col("c").as("c_cur"))), "vertex")
-      .join(probe(deg), "vertex")
-      .join(probe(tot), "c")
+      .join(comm.select(col("vertex"), col("c").as("c_cur")), "vertex")
+      .join(deg, "vertex")
+      .join(tot, "c")
       .crossJoin(m2)
       .withColumn("tot_adj",
         when(col("c") === col("c_cur"), col("tot_c") - col("deg"))
@@ -1728,14 +1708,12 @@ object GraphOps {
       val e = edges.select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"))
         .localCheckpoint(true)
-      var lab = e.select(col("src").as("vertex")).distinct()
-        .withColumn("label", col("vertex"))
-        .localCheckpoint(true)
-      val probe = vertexProbe(lab) // gate decided once — V is fixed
+      var lab = Materialize(e.select(col("src").as("vertex")).distinct()
+        .withColumn("label", col("vertex")))
       var round = 0
       var converged = false
       while (!converged && round < maxRounds) {
-        val next = lpaRound(e, lab, probe).localCheckpoint(true)
+        val next = Materialize(lpaRound(e, lab))
         converged = next.join(lab, Seq("vertex", "label"), "left_anti").isEmpty
         lab = next; round += 1
       }
@@ -1795,13 +1773,12 @@ object GraphOps {
     * vertex — and the row_number window this replaced added a full sort
     * besides.
     */
-  private def lpaRound(e: DataFrame, lab: DataFrame,
-                       probe: DataFrame => DataFrame = identity): DataFrame =
-    // probe = gated vertex broadcast ([[vertexProbe]], r19): the V-sized
-    // label map broadcasts into the edge join, so the checkpointed edge
+  private[graft] def lpaRound(e: DataFrame, lab: DataFrame): DataFrame =
+    // the V-sized label map (materialized by the caller) broadcasts into
+    // the edge join while within the threshold, so the checkpointed edge
     // table never shuffles per round (the repartition below remains the
     // round's ONE semantic exchange, feeding both aggregates)
-    e.join(probe(lab.withColumnRenamed("vertex", "dst")), "dst")
+    e.join(lab.withColumnRenamed("vertex", "dst"), "dst")
       .select(col("src").as("vertex"), col("label"))
       .repartition(col("vertex"))
       .groupBy("vertex", "label")
@@ -1840,88 +1817,6 @@ object GraphOps {
     p.select(col("a").as("vertex")).unionAll(p.select(col("b").as("vertex")))
       .groupBy("vertex").agg(count(lit(1)).cast("long").as("degree"))
 
-  /** Row-count ceiling under which VERTEX-keyed per-round side tables
-    * (rank vectors, label maps, degree/community maps) BROADCAST into
-    * their edge-table joins (guide §3.1). Every iteration kernel's rank/
-    * label side is a checkpointed LogicalRDD with NO size statistics, so
-    * the planner never auto-broadcasts it — AQE converts to broadcast at
-    * runtime but only AFTER paying the shuffle write of both sides, every
-    * round. Below the gate the side is broadcast explicitly and the edge
-    * table never shuffles for the join; above it (the 100 TB path, where
-    * a V-sized vector no longer fits an executor) the shuffled shape is
-    * kept. Knob contract as [[censusBroadcastMax]]: sys-prop first
-    * (`graft.vertexBroadcastMax`; tests force the shuffle path with 0),
-    * env (`GRAFT_VERTEX_BROADCAST_MAX`) second.
-    */
-  private[graft] def vertexBroadcastMax: Long =
-    sys.props.get("graft.vertexBroadcastMax")
-      .orElse(sys.env.get("GRAFT_VERTEX_BROADCAST_MAX"))
-      .map(_.trim.toLong).getOrElse(4000000L)
-
-  /** Probe builder for vertex-keyed side tables: `broadcast(df)` when the
-    * MATERIALIZED vertex frame `v` is under [[vertexBroadcastMax]] rows
-    * (count = partition-size sum on a checkpointed frame), identity
-    * otherwise. Decided ONCE per query from the vertex set — V never
-    * grows mid-iteration — and passed into the round kernels. Strategy
-    * only: results are bit-identical across the gate.
-    */
-  private[graft] def vertexProbe(v: DataFrame): DataFrame => DataFrame =
-    if (v.count() <= vertexBroadcastMax) broadcast(_) else identity
-
-  /** Edge-count ceiling under which the census joins BROADCAST the
-    * oriented edge set instead of shuffling the wedge fan-out through
-    * sort-merge joins (guide §3.1) — the batch analogue of the K4
-    * maintainer's `quadBroadcastMax`. The wedge/extension fan-out is
-    * O(m^1.5) rows while the probe side stays O(m): below the gate every
-    * existence probe is a map-side BroadcastHashJoin and the fan-out
-    * never crosses an exchange; above it (the 100 TB path) the joins
-    * shuffle as before — the fan-out pays the exchange but no single
-    * executor must hold the edge set. Same knob contract as the twin:
-    * sys-prop first (tests force the shuffle path with 0), env second.
-    */
-  private[graft] def censusBroadcastMax: Long =
-    sys.props.get("graft.censusBroadcastMax")
-      .orElse(sys.env.get("GRAFT_CENSUS_BROADCAST_MAX"))
-      .map(_.trim.toLong).getOrElse(4000000L)
-
-  /** Probe builder for the census joins: `broadcast(df)` when the
-    * CHECKPOINTED oriented edge set `o` is under [[censusBroadcastMax]]
-    * edges (the count is a partition-size sum — `o` must already be
-    * materialized), identity otherwise. Join strategy only — the joined
-    * relation is the same either way, so every census result is
-    * bit-identical across the gate.
-    */
-  private[graft] def censusProbe(o: DataFrame): DataFrame => DataFrame =
-    if (o.count() <= censusBroadcastMax) broadcast(_) else identity
-
-  /** ABOVE-gate Bloom prune for the census closing-edge semi-joins (r19
-    * verdict #4, guide §3.2): below [[censusBroadcastMax]] the probes
-    * broadcast and the fan-out never crosses an exchange — the prune is
-    * identity. Above the gate the wedge / tri-pair fan-out must shuffle
-    * to meet the sort-merge semi-join, and at cluster scale most
-    * candidates do not survive it — so a broadcast Bloom over the probe
-    * relation's canonical key (the batch form of the K4 maintainer's
-    * edge Bloom; blob capped at 2^28 bits ≈ 32 MB, past which the FP
-    * rate degrades, never the answer) drops non-members map-side BEFORE
-    * the exchange. The exact semi-join still runs on the survivors, so
-    * results are bit-identical across the gate (GraphOpsSpec pin).
-    * Returns: fan-out keys → fan-out frame → pruned frame.
-    */
-  private[graft] def censusBloomPrune(probeRel: DataFrame, keys: Seq[String])
-      : Seq[org.apache.spark.sql.Column] => DataFrame => DataFrame = {
-    val n = probeRel.count() // probeRel is checkpointed: partition-size sum
-    if (n <= censusBroadcastMax) _ => identity
-    else {
-      val bits = math.max(64L * 8L, math.min(n * 8L, 1L << 28))
-      val bf = probeRel.agg(graft.pipeline.RuntimeFilters.bloomAgg(
-          struct(keys.map(col): _*), math.max(n, 1L), bits).as("bf"))
-        .localCheckpoint(true) // built once, probed by every prune site
-      ks => df => df.filter(coalesce(
-        graft.pipeline.RuntimeFilters.mightContain(bf, struct(ks: _*)),
-        lit(true)))
-    }
-  }
-
   /** Every triangle exactly once as an ≺-ordered triple `u ≺ v ≺ w` over
     * a degree-ordered orientation `o` (see [[orientByDegree]]): join the
     * in-edges of each MIDDLE vertex v (u → v) with its out-edges (v → w) —
@@ -1932,18 +1827,20 @@ object GraphOps {
     * O(m^1.5) total (arboricity bound): a hub's huge in-degree multiplies
     * its SMALL out-degree, never itself. Output: (u, v, w).
     *
-    * `probe` (r19, guide §3.1) wraps the out-edge and closing-edge sides:
-    * [[censusProbe]]'s gated broadcast keeps the O(m^1.5) wedge fan-out
-    * from ever crossing an exchange — the shuffled plan sorted the full
-    * fan-out once per probe join.
+    * With `o` materialized ([[graft.plans.Materialize]]) and within the
+    * broadcast threshold, the out-edge and closing-edge sides broadcast,
+    * so the O(m^1.5) wedge fan-out never crosses an exchange. Past the
+    * threshold the joins shuffle and `prune` (a
+    * [[graft.pipeline.RuntimeFilters.bloomPrune]] over `o`) drops wedges
+    * with no closing edge map-side, before the exchange.
     */
   private[graft] def orientedTriangles(
-      o: DataFrame, probe: DataFrame => DataFrame = identity,
+      o: DataFrame,
       prune: Seq[org.apache.spark.sql.Column] => DataFrame => DataFrame =
         _ => identity): DataFrame =
     prune(Seq(col("u"), col("w")))(
-        o.join(probe(o.select(col("u").as("v"), col("v").as("w"))), "v"))
-      .join(probe(o.select(col("u"), col("v").as("w"))), Seq("u", "w"), "left_semi")
+        o.join(o.select(col("u").as("v"), col("v").as("w")), "v"))
+      .join(o.select(col("u"), col("v").as("w")), Seq("u", "w"), "left_semi")
       .select("u", "v", "w")
 
   /** Per-vertex triangle counts over an undirected graph given as
@@ -1963,9 +1860,9 @@ object GraphOps {
   def triangleCounts(pairs: DataFrame): DataFrame = {
     val p = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
       .localCheckpoint(true) // scanned by the degree agg AND the orientation join
-    val o = orientByDegree(p, pairDegrees(p).localCheckpoint(true))
-      .localCheckpoint(true) // feeds all three sides of the triangle join
-    orientedTriangles(o, censusProbe(o), censusBloomPrune(o, Seq("u", "v")))
+    // feeds all three sides of the triangle join
+    val o = Materialize(orientByDegree(p, pairDegrees(p).localCheckpoint(true)))
+    orientedTriangles(o, bloomPrune(o, Seq(col("u"), col("v"))))
       .select(explode(array(col("u"), col("v"), col("w"))).as("vertex"))
       .groupBy("vertex").agg(count(lit(1)).cast("long").as("n_triangles"))
       .orderBy("vertex")
@@ -2001,21 +1898,19 @@ object GraphOps {
     * ≥ 1 clique.
     */
   def fourCliqueCounts(pairs: DataFrame, maxExtendDegree: Long = 0L): DataFrame = {
-    val p = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .localCheckpoint(true) // scanned by the degree agg AND the orientation join
+    // scanned by the degree agg, the orientation join and the closing probe
+    val p = Materialize(pairs.select(col("a").cast("long").as("a"),
+      col("b").cast("long").as("b")))
     val deg = pairDegrees(p).localCheckpoint(true) // feeds orientation + cap
-    val o = orientByDegree(p, deg)
-      .localCheckpoint(true) // feeds all five sides of the census join
-    // gated broadcast probes (guide §3.1): below censusBroadcastMax every
-    // existence probe is a map-side BroadcastHashJoin — the candidate
-    // stream never crosses an exchange; the shuffled plan sorted it once
-    // per probe join
-    val probe = censusProbe(o)
-    // above-gate Bloom prunes (identity below the gate): one over the
+    // feeds all five sides of the census join; within the broadcast
+    // threshold every existence probe is a map-side BroadcastHashJoin and
+    // the candidate stream never crosses an exchange
+    val o = Materialize(orientByDegree(p, deg))
+    // past the threshold, Bloom prunes (identity within it): one over the
     // oriented closing edge for the wedge fan-out, one over the
     // canonical pair set for the tri-pair closing semi (guide §3.2)
-    val prune = censusBloomPrune(o, Seq("u", "v"))
-    val pruneP = censusBloomPrune(p, Seq("a", "b"))
+    val prune = bloomPrune(o, Seq(col("u"), col("v")))
+    val pruneP = bloomPrune(p, Seq(col("a"), col("b")))
     val quad =
       if (maxExtendDegree <= 0) {
         // EXACT path (r19, guide §2.3 "don't compute things you throw
@@ -2032,12 +1927,12 @@ object GraphOps {
         // edges verified (four by the two triangles, one shared, one by
         // the closing probe), and each K4 survives exactly once via its
         // ≺-minimal edge and the id-order filter.
-        val tri = orientedTriangles(o, probe, prune)
+        val tri = orientedTriangles(o, prune)
           .localCheckpoint(true) // feeds both sides of the pair self-join
         pruneP(Seq(col("w"), col("t")))(tri
           .join(tri.select(col("u"), col("v"), col("w").as("t")), Seq("u", "v"))
           .filter(col("w") < col("t")))
-          .join(probe(p.select(col("a").as("w"), col("b").as("t"))),
+          .join(p.select(col("a").as("w"), col("b").as("t")),
             Seq("w", "t"), "left_semi")
       } else {
         // capped path (maxExtendDegree > 0): the extension-source degree
@@ -2047,10 +1942,10 @@ object GraphOps {
         // counterpart in the tri-pair shape
         val ext = o.join(deg.filter(col("degree") <= maxExtendDegree)
           .select(col("vertex").as("u")), Seq("u"), "left_semi")
-        orientedTriangles(o, probe, prune)
-          .join(probe(ext.select(col("u").as("w"), col("v").as("t"))), "w")
-          .join(probe(o.select(col("u"), col("v").as("t"))), Seq("u", "t"), "left_semi")
-          .join(probe(o.select(col("u").as("v"), col("v").as("t"))), Seq("v", "t"), "left_semi")
+        orientedTriangles(o, prune)
+          .join(ext.select(col("u").as("w"), col("v").as("t")), "w")
+          .join(o.select(col("u"), col("v").as("t")), Seq("u", "t"), "left_semi")
+          .join(o.select(col("u").as("v"), col("v").as("t")), Seq("v", "t"), "left_semi")
       }
     quad.select(explode(array(col("u"), col("v"), col("w"), col("t"))).as("vertex"))
       .groupBy("vertex").agg(count(lit(1)).cast("long").as("n_cliques4"))
@@ -2077,15 +1972,14 @@ object GraphOps {
     * conductance) ordered.
     */
   def communityConductance(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val l = labels.select(col("vertex").cast("long").as("vertex"),
-      col("label").cast("long").as("label")).localCheckpoint(true)
-    // gated vertex broadcast ([[vertexProbe]], r19): both endpoint label
-    // joins probe the broadcast map — the edge table never shuffles
-    val probe = vertexProbe(l)
+    // both endpoint label joins probe the map, broadcast while within the
+    // threshold — the edge table never shuffles
+    val l = Materialize(labels.select(col("vertex").cast("long").as("vertex"),
+      col("label").cast("long").as("label")))
     val es = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .join(probe(l.select(col("vertex").as("src"), col("label").as("c_src"))), "src")
-      .join(probe(l.select(col("vertex").as("dst"), col("label").as("c_dst"))), "dst")
+      .join(l.select(col("vertex").as("src"), col("label").as("c_src")), "src")
+      .join(l.select(col("vertex").as("dst"), col("label").as("c_dst")), "dst")
     val perc = es.groupBy(col("c_src").as("community"))
       .agg(count(lit(1)).cast("long").as("volume"),
         sum(when(col("c_src") =!= col("c_dst"), 1L).otherwise(0L))
@@ -2163,10 +2057,8 @@ object GraphOps {
       .localCheckpoint(true) // scanned by the degree agg AND the orientation join
     val deg = pairDegrees(p)
       .localCheckpoint(true) // feeds the orientation AND the coefficient
-    val o = orientByDegree(p, deg)
-      .localCheckpoint(true) // feeds all three sides of the triangle join
-    val tri = orientedTriangles(o, censusProbe(o),
-        censusBloomPrune(o, Seq("u", "v")))
+    val o = Materialize(orientByDegree(p, deg)) // feeds all three sides of the triangle join
+    val tri = orientedTriangles(o, bloomPrune(o, Seq(col("u"), col("v"))))
       .select(explode(array(col("u"), col("v"), col("w"))).as("vertex"))
       .groupBy("vertex").agg(count(lit(1)).cast("long").as("n_triangles"))
     deg.filter(col("degree") >= 2)
@@ -2282,63 +2174,64 @@ object GraphOps {
     *
     * Output: EVERY vertex with an `in_mis` 0/1 flag, totally ordered.
     */
-  /** One MIS round's winner derivation (UNMATERIALIZED — the loop
-    * checkpoints): v wins iff no UNDECIDED neighbor u has smaller
-    * priority (h, id). One blocked-join over the current edge set + one
-    * anti-join against the undecided set — no cartesian, no window.
-    * Factored out so PlanSpec pins the production round body.
+  /** One MIS round's blocked set (UNMATERIALIZED — the loop
+    * materializes it): the undecided v with an UNDECIDED neighbor u of
+    * smaller priority (h, id). One blocked-join over the current edge set
+    * — no cartesian, no window. Factored out, with [[misWinners]], so
+    * PlanSpec pins the production round body.
     */
-  private[graft] def misWinners(und: DataFrame, edges: DataFrame,
-                                probe: DataFrame => DataFrame = identity): DataFrame = {
-    // probe = gated vertex broadcast ([[vertexProbe]], r19): the ≤V-row
-    // undecided map broadcasts into both priority lookups and the blocked
-    // anti-join, so the (shrinking) edge set never shuffles per round
+  private[graft] def misBlocked(und: DataFrame, edges: DataFrame): DataFrame = {
+    // the ≤V-row undecided map (materialized by the caller) broadcasts
+    // into both priority lookups while within the threshold, so the
+    // (shrinking) edge set never shuffles for them
     val eh = edges
-      .join(probe(und.select(col("v"), col("h").as("hv"))), "v")
-      .join(probe(und.select(col("v").as("u"), col("h").as("hu"))), "u")
-    val blocked = eh.filter(col("hu") < col("hv") ||
+      .join(und.select(col("v"), col("h").as("hv")), "v")
+      .join(und.select(col("v").as("u"), col("h").as("hu")), "u")
+    eh.filter(col("hu") < col("hv") ||
         (col("hu") === col("hv") && col("u") < col("v")))
       .select("v").distinct()
-    und.join(probe(blocked), Seq("v"), "left_anti").select("v")
   }
+
+  /** The round's winners: the undecided vertices not in `blocked` (a
+    * materialized [[misBlocked]], so the anti-join broadcasts it while
+    * within the threshold).
+    */
+  private[graft] def misWinners(und: DataFrame, blocked: DataFrame): DataFrame =
+    und.join(blocked, Seq("v"), "left_anti").select("v")
 
   /** Restrict the symmetric adjacency to edges whose BOTH endpoints are
     * still undecided — two semi-joins, so the per-round edge set SHRINKS
     * geometrically (the property that bounds MIS round cost).
     */
-  private[graft] def misShrinkEdges(edges: DataFrame, und: DataFrame,
-                                    probe: DataFrame => DataFrame = identity): DataFrame =
+  private[graft] def misShrinkEdges(edges: DataFrame, und: DataFrame): DataFrame =
     edges
-      .join(probe(und.select("v")), Seq("v"), "left_semi")
-      .join(probe(und.select(col("v").as("u"))), Seq("u"), "left_semi")
+      .join(und.select("v"), Seq("v"), "left_semi")
+      .join(und.select(col("v").as("u")), Seq("u"), "left_semi")
 
   def maximalIndependentSet(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
     val spark = pairs.sparkSession
     val p = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
     val vertices = p.select(col("a").as("v")).unionAll(p.select(col("b").as("v")))
       .distinct().localCheckpoint(true)
-    var und = vertices
+    var und = Materialize(vertices
       .withColumn("h", graft.functions.PortableHash.md5Bits60(
-        concat_ws("_", lit("mis"), col("v"))))
-      .localCheckpoint(true)
+        concat_ws("_", lit("mis"), col("v")))))
     var edges = p.select(col("a").as("v"), col("b").as("u"))
       .unionAll(p.select(col("b").as("v"), col("a").as("u")))
       .localCheckpoint(true) // symmetric adjacency, shrinks every round
-    val probe = vertexProbe(und) // gate decided once — und only shrinks
     val winnersAcc = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var round = 0
-    var remaining = und.count()
-    while (remaining > 0) {
+    while (Materialize.rowCount(und) > 0) {
       require(round < maxRounds, s"MIS did not converge in $maxRounds rounds")
-      val winners = misWinners(und, edges, probe)
-        .localCheckpoint(true) // feeds the accumulator AND two joins below
+      // feeds the accumulator AND two joins below
+      val winners = Materialize(misWinners(und, Materialize(misBlocked(und, edges))))
       winnersAcc += winners
-      val losers = edges.join(probe(winners.select(col("v").as("u"))), Seq("u"))
-        .select("v").distinct()
+      // materialized so `decided` carries its real size into the anti-join
+      val losers = Materialize(edges.join(winners.select(col("v").as("u")), Seq("u"))
+        .select("v").distinct())
       val decided = winners.unionAll(losers)
-      und = und.join(probe(decided), Seq("v"), "left_anti").localCheckpoint(true)
-      edges = misShrinkEdges(edges, und, probe).localCheckpoint(true)
-      remaining = und.count()
+      und = Materialize(und.join(decided, Seq("v"), "left_anti"))
+      edges = misShrinkEdges(edges, und).localCheckpoint(true)
       round += 1
     }
     val inMis =
@@ -2368,42 +2261,36 @@ object GraphOps {
     */
   def maximalMatching(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
     val p = pairs.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-    var und = p.withColumn("h", graft.functions.PortableHash.md5Bits60(
-        concat_ws("_", lit("match"), col("a"), col("b"))))
-      .localCheckpoint(true)
-    // gated broadcast ([[vertexProbe]], r19): the conflict self-join's
-    // build side, the blocked set and the winner-endpoint set are all
-    // bounded by the (shrinking) undecided edge set — probing them
-    // broadcast keeps every per-round join map-side below the gate
-    val probe = vertexProbe(und)
+    // the conflict self-join's build side and the winner-endpoint set are
+    // bounded by the (shrinking) undecided edge set: materialized, they
+    // broadcast while within the threshold and every per-round join stays
+    // map-side
+    var und = Materialize(p.withColumn("h", graft.functions.PortableHash.md5Bits60(
+        concat_ws("_", lit("match"), col("a"), col("b")))))
     val acc = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var round = 0
-    var remaining = und.count()
-    while (remaining > 0) {
+    while (Materialize.rowCount(und) > 0) {
       require(round < maxRounds, s"matching did not converge in $maxRounds rounds")
-      val ep = und.select(col("a").as("p"), col("a"), col("b"), col("h"))
-        .unionAll(und.select(col("b").as("p"), col("a"), col("b"), col("h")))
-        .localCheckpoint(true) // feeds both sides of the conflict join
-      val blocked = ep
-        .join(probe(ep.select(col("p"), col("a").as("a2"), col("b").as("b2"),
-          col("h").as("h2"))), "p")
+      // feeds both sides of the conflict join
+      val ep = Materialize(und.select(col("a").as("p"), col("a"), col("b"), col("h"))
+        .unionAll(und.select(col("b").as("p"), col("a"), col("b"), col("h"))))
+      val blocked = Materialize(ep // sized for the winners' anti-join
+        .join(ep.select(col("p"), col("a").as("a2"), col("b").as("b2"),
+          col("h").as("h2")), "p")
         .filter((col("a2") =!= col("a") || col("b2") =!= col("b")) &&
           (col("h2") < col("h") ||
             (col("h2") === col("h") && (col("a2") < col("a") ||
               (col("a2") === col("a") && col("b2") < col("b"))))))
-        .select("a", "b").distinct()
-      val winners = und.join(probe(blocked), Seq("a", "b"), "left_anti")
+        .select("a", "b").distinct())
+      val winners = und.join(blocked, Seq("a", "b"), "left_anti")
         .select("a", "b").localCheckpoint(true)
       acc += winners
-      val wp = winners.select(col("a").as("p"))
-        .unionAll(winners.select(col("b").as("p"))).distinct()
-        .localCheckpoint(true) // feeds two anti-joins
-      und = und
-        .join(probe(wp.withColumnRenamed("p", "a")), Seq("a"), "left_anti")
-        .join(probe(wp.withColumnRenamed("p", "b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"), col("h"))
-        .localCheckpoint(true)
-      remaining = und.count()
+      val wp = Materialize(winners.select(col("a").as("p")) // feeds two anti-joins
+        .unionAll(winners.select(col("b").as("p"))).distinct())
+      und = Materialize(und
+        .join(wp.withColumnRenamed("p", "a"), Seq("a"), "left_anti")
+        .join(wp.withColumnRenamed("p", "b"), Seq("b"), "left_anti")
+        .select(col("a"), col("b"), col("h")))
       round += 1
     }
     if (acc.isEmpty) p.limit(0) else acc.reduce(_ unionAll _).orderBy("a", "b")

@@ -49,6 +49,38 @@ object RuntimeFilters {
       ScalarSubquery(bloomDf.queryExecution.analyzed),
       new XxHash64(Seq(Bridge.expression(key)))))
 
+  /** Bloom pre-filter for a fan-out that meets an exact existence probe
+    * against `probeRel`, a frame returned by [[graft.plans.Materialize]],
+    * on its `keys`. Within the broadcast threshold the probe joins
+    * broadcast and the fan-out never crosses an exchange, so the prune is
+    * identity. Past it the fan-out shuffles to meet the probe, and at
+    * cluster scale most of it does not survive: a Bloom filter over the
+    * probe keys, built once and shipped to every task as a scalar, drops
+    * non-members map-side before the exchange. The exact join still runs
+    * on the survivors, so results do not change.
+    *
+    * Sized from `probeRel`'s observed row count at 8 bits per item, with
+    * items and bits capped at the session's
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` / `maxNumBits`
+    * (the caps `BloomFilterAggregate` applies anyway, read here so the
+    * size asked for is the size built). Past the caps the false-positive
+    * rate grows, never the answer. No conf is written.
+    * Returns: fan-out keys → fan-out frame → pruned frame.
+    */
+  def bloomPrune(probeRel: DataFrame, keys: Seq[Column])
+      : Seq[Column] => DataFrame => DataFrame =
+    if (graft.plans.Materialize.small(probeRel)) _ => identity
+    else {
+      val conf = probeRel.sparkSession.conf
+      def cap(name: String) = conf.get(s"spark.sql.optimizer.runtime.bloomFilter.$name").toLong
+      val items = math.min(math.max(graft.plans.Materialize.rowCount(probeRel), 1L),
+        cap("maxNumItems"))
+      val bits = math.min(math.max(items * 8L, 64L * 8L), cap("maxNumBits"))
+      val bf = probeRel.agg(bloomAgg(struct(keys: _*), items, bits).as("bf"))
+        .localCheckpoint(true) // built once, probed by every prune site
+      ks => df => df.filter(coalesce(mightContain(bf, struct(ks: _*)), lit(true)))
+    }
+
   /** Revenue by order priority for one customer segment, with the fact scan
     * pruned by a runtime Bloom filter BEFORE the exact semi-join:
     *

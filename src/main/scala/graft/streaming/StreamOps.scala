@@ -80,6 +80,10 @@ object StreamOps {
       rocksdb: Boolean = false): org.apache.spark.sql.SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "8")
+    // a new session starts from the static conf: carry the caller's
+    // broadcast threshold, the one knob that sizes the twins' joins
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    s.conf.set(threshold, spark.conf.get(threshold))
     if (rocksdb)
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -611,54 +615,49 @@ object StreamOps {
       .partitionBy("bucket").parquet(target)
   }
 
-  /** Edge ceiling for the per-batch merge-map CC's driver-local path
-    * ([[mergeMapCC]]); 0 forces the distributed kernel (tests). */
-  private[graft] def localCcMax: Long =
-    sys.props.get("graft.localCcMax").orElse(sys.env.get("GRAFT_LOCAL_CC_MAX"))
-      .map(_.trim.toLong).getOrElse(4000000L)
-
   /** Connected components of a per-batch CONTRACTED merge graph (r20).
     * The contracted graph is delta-scaled (one node per currently-merging
     * component, edges only where this batch fuses two), yet the GraphX
     * kernel spends a fixed train of per-batch jobs on it — profiled
     * ~0.4–0.5 s/batch on the curation and CC maintainers at sf0.1, pure
-    * control-plane overhead at that size. Below [[localCcMax]] edges the
-    * components are computed on the DRIVER by union-find with min-id
+    * control-plane overhead at that size. While `contracted` is within
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's own "small enough to
+    * ship whole", the rule [[graft.graph.GraphCatalog.latestForTraversal]]
+    * uses) the components are computed on the DRIVER by union-find over
+    * primitive arrays indexed by the sorted distinct ids, with min-id
     * representatives — BIT-IDENTICAL to GraphX `connectedComponents`
     * (both label every component with its minimum vertex id; pinned by
-    * the StreamSpec gate test) — and returned as a LocalRelation, which
-    * downstream broadcast joins consume without a single job. Above the
-    * gate (100 TB path: a batch that fuses data-scale many components)
+    * the StreamSpec test) — and returned as a LocalRelation, which
+    * downstream broadcast joins consume without a single job. Past the
+    * threshold, or at -1 (a batch that fuses data-scale many components)
     * the distributed kernel runs unchanged, checkpointed for its two
-    * consumers. `contracted` must be materialized (the count is a
-    * cached-block sum).
+    * consumers. `contracted` must come from [[graft.plans.Materialize]],
+    * so its planner size is its real size.
     */
   private[graft] def mergeMapCC(spark: org.apache.spark.sql.SparkSession,
                                 contracted: DataFrame): DataFrame = {
     import spark.implicits._
-    if (contracted.count() <= localCcMax) {
-      val parent = new java.util.HashMap[Long, java.lang.Long]()
-      def find(x0: Long): Long = {
-        var r = x0
-        while (parent.get(r).longValue != r) r = parent.get(r).longValue
-        var x = x0 // path compression
-        while (parent.get(x).longValue != r) {
-          val nx = parent.get(x).longValue; parent.put(x, r); x = nx
-        }
-        r
+    if (graft.plans.Materialize.small(contracted)) {
+      val rows = contracted.select(col("src").cast("long"), col("dst").cast("long")).collect()
+      val ends = rows.flatMap(r => Array(r.getLong(0), r.getLong(1)))
+      java.util.Arrays.sort(ends)
+      var k = 0 // distinct prefix of the sorted ids, compacted in place
+      for (v <- ends if k == 0 || ends(k - 1) != v) { ends(k) = v; k += 1 }
+      val ids = java.util.Arrays.copyOf(ends, k)
+      // parent over indices: ids are sorted, so the smaller index is the
+      // smaller id and every root is its component's minimum
+      val parent = Array.tabulate(k)(identity)
+      def find(x0: Int): Int = {
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
       }
-      contracted.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().foreach { row =>
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-          val (ra, rb) = (find(a), find(b))
-          // min-id root: GraphX's component label is the minimum id
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-      val out = Seq.newBuilder[(Long, Long)]
-      parent.keySet().forEach(v => out += ((v.longValue(), find(v))))
-      out.result().toDF("vertex", "component")
+      for (r <- rows) {
+        val ra = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+        val rb = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      ids.indices.map(i => (ids(i), ids(find(i)))).toDF("vertex", "component")
     } else {
       val cverts = contracted.select(col("src").as("vertex"))
         .unionAll(contracted.select(col("dst").as("vertex"))).distinct()
@@ -673,17 +672,6 @@ object StreamOps {
     * holds this many generations.
     */
   private val MaintenanceFanIn = 4
-
-  /** Edge-count ceiling for the K4 maintainer's exact-edge-set broadcast
-    * ([[fourcliqueMaintainReplayBatch]]); above it the existence probes
-    * shuffle, pre-pruned by a broadcast Bloom over the edge key. The
-    * override exists so StreamSpec can force the Bloom path on a
-    * hand-sized graph (0 ⇒ never broadcast).
-    */
-  private[graft] def quadBroadcastMax: Long =
-    sys.props.get("graft.quadBroadcastMax")
-      .orElse(sys.env.get("GRAFT_QUAD_BROADCAST_MAX"))
-      .map(_.trim.toLong).getOrElse(4000000L)
 
   /** In-memory per-store tier tally (r18 verdict #1a): last listed
     * per-dir per-level file counts plus the number of maintenance calls
@@ -1530,14 +1518,14 @@ object StreamOps {
               labelStore, "vertex", nBuckets)
           } else {
             val all = labels0.select("vertex", "comp").unionByName(newVerts)
-            val contracted = broadcast(broadcast(edges)
+            val contracted = graft.plans.Materialize(broadcast(broadcast(edges)
                 .join(all.select(col("vertex").as("src"), col("comp").as("csrc")), "src"))
               .join(all.select(col("vertex").as("dst"), col("comp").as("cdst")), "dst")
               .select(col("csrc").as("src"), col("cdst").as("dst"))
-              .filter(col("src") =!= col("dst")).distinct()
-              .localCheckpoint(true)
-            // merge map via the gated driver union-find (r20): bit-identical
-            // to the GraphX kernel, no per-batch job train at delta scale
+              .filter(col("src") =!= col("dst")).distinct())
+            // merge map via the driver union-find within the broadcast
+            // threshold (r20): bit-identical to the GraphX kernel, no
+            // per-batch job train at delta scale
             val merge = mergeMapCC(spark, contracted)
               .select(col("vertex").as("comp"), col("component").as("newComp"))
             val newResolved = newVerts.join(broadcast(merge), Seq("comp"), "left_outer")
@@ -1899,8 +1887,8 @@ object StreamOps {
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val e = batch.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst")).localCheckpoint(true)
+        val e = graft.plans.Materialize(batch.select(col("src").cast("long").as("src"),
+          col("dst").cast("long").as("dst")))
         // op 1 (first batch) / delta versions (later batches): the batch's
         // edges land as a DELTA version — per-batch written bytes scale
         // with the delta, while cat.load("S") still serves the cumulative
@@ -1917,12 +1905,12 @@ object StreamOps {
         if (compactEvery > 0 && batchesDone % compactEvery == 0)
           cat.compact("S")
         // Broadcast the |Δ|-sized sides explicitly when the delta is small:
-        // every relation here comes off a localCheckpoint (stats unknown →
-        // Catalyst never plans the broadcast itself), so unhinted plans
-        // shuffle the O(V) label relation TWICE per batch. Gated on the
-        // batch's own row count, same pattern as the K4 twin — past the
-        // threshold Spark falls back to the shuffle join, the 100 TB path.
-        val smallDelta = e.count() <= 4000000L // cached blocks: milliseconds
+        // they are derived from the label store and the batch, sizes
+        // Catalyst cannot bound, so unhinted plans shuffle the O(V) label
+        // relation TWICE per batch. Decided by the batch's own planner
+        // size against the broadcast threshold — past it Spark falls back
+        // to the shuffle join, the 100 TB path.
+        val smallDelta = graft.plans.Materialize.small(e)
         def bc(df: DataFrame): DataFrame =
           if (smallDelta) broadcast(df) else df
         val labels0 =
@@ -1955,20 +1943,19 @@ object StreamOps {
           .localCheckpoint(true) // feeds `all` twice AND newResolved below
         val all = labels0.select("vertex", "comp").unionByName(newVerts)
         // contract batch edges through the current labeling
-        val contracted = bc(bc(e)
+        // materialized once: it feeds the vertex derivation AND the CC
+        // edge RDD — unchecked, the two full-state contraction joins
+        // re-execute per consumer (r15 profile: ~1.3s/batch of the
+        // seq-basis cost was exactly this recomputation)
+        val contracted = graft.plans.Materialize(bc(bc(e)
             .join(all.select(col("vertex").as("src"), col("comp").as("csrc")), "src"))
           .join(all.select(col("vertex").as("dst"), col("comp").as("cdst")), "dst")
           .select(col("csrc").as("src"), col("cdst").as("dst"))
-          .filter(col("src") =!= col("dst")).distinct()
-          // materialized once: it feeds the vertex derivation AND the CC
-          // edge RDD — unchecked, the two full-state contraction joins
-          // re-execute per consumer (r15 profile: ~1.3s/batch of the
-          // seq-basis cost was exactly this recomputation)
-          .localCheckpoint(true)
+          .filter(col("src") =!= col("dst")).distinct())
         // merge map over the contracted graph only (unordered — it feeds
         // an equi-join; a DataFrame min-label fixpoint was MEASURED
         // slower here in r11/r15). r20: [[mergeMapCC]] computes the
-        // delta-scaled merge map on the driver below the gate —
+        // delta-scaled merge map on the driver within the threshold —
         // bit-identical min-id labels, zero per-batch jobs — and falls
         // back to the distributed kernel past it.
         val merge = mergeMapCC(spark, contracted)
@@ -2675,68 +2662,29 @@ object StreamOps {
     val inDir = s"$tmp/in"
     val state = s"$tmp/state"
     stateDirProbe(state)
-    pairs0.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .repartition(splits).write.parquet(inDir)
+    stageCanonicalPairs(spark, pairs0, inDir, splits)
     val schema = spark.read.parquet(inDir).schema
     val cat = new graft.graph.GraphCatalog(spark, s"$tmp/graphs")
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     var batchesDone = 0L
-    var edgesTotal = 0L
     val q = src.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import spark.implicits._
-        val d = batch.select(col("a").cast("long").as("a"),
-          col("b").cast("long").as("b")).localCheckpoint(true)
+        val d = graft.plans.Materialize(batch.select(col("a").cast("long").as("a"),
+          col("b").cast("long").as("b")))
         val dEdges = d.select(col("a").as("src"), col("b").as("dst"))
         // the OLD adjacency = the catalog chain BEFORE this batch's delta
-        // lands, checkpointed ONCE (pins every pre-batch chain read ahead
-        // of the delta write; feeds the T1 fan via symOld plus both
-        // closing-probe broadcast builds)
-        val eOld =
-          (if (cat.exists("T"))
-             cat.load("T").select(col("src").as("a"), col("dst").as("b"))
-           else Seq.empty[(Long, Long)].toDF("a", "b"))
-            .localCheckpoint(true)
-        val symOld = eOld.select(col("a").as("x"), col("b").as("y"))
-          .unionAll(eOld.select(col("b").as("x"), col("a").as("y")))
-        // r20 (guide §3.1, the K4 twin's gate): below quadBroadcastMax
-        // the |Δ| side and the canonical closing-edge probes broadcast —
-        // the old unhinted plan shuffled the O(E) symmetric adjacency
-        // TWICE per batch (fan + closing semi) against no-stats
-        // checkpoints. Past the gate the shuffle shapes return (100 TB
-        // path). Disjoint replay deltas keep the running edge count exact.
-        edgesTotal += d.count() // cached blocks: milliseconds, O(|Δ|)
-        val small = edgesTotal <= quadBroadcastMax
-        def bcE(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-        // T1: delta edge (a,b) + old edges (a,c), (b,c) — the closing
-        // {b,c} probe keys the CANONICAL store via least/greatest (the
-        // same edge set the symOld semi encoded, at half the rows)
-        val t1 = (if (small) broadcast(d) else d)
-          .join(symOld.select(col("x").as("a"), col("y").as("c")), "a")
-          .join(bcE(eOld.select(col("a").as("e1"), col("b").as("e2"))),
-            col("e1") === least(col("b"), col("c")) &&
-              col("e2") === greatest(col("b"), col("c")), "left_semi")
-          .select("a", "b", "c")
-        // T2: delta wedge (m,x), (m,y) with x < y, closing OLD edge (x,y)
-        val symD = d.select(col("a").as("m"), col("b").as("x"))
-          .unionAll(d.select(col("b").as("m"), col("a").as("x")))
-        val t2 = symD
-          .join(symD.select(col("m"), col("x").as("y")), "m")
-          .filter(col("x") < col("y"))
-          .join(bcE(eOld.select(col("a").as("x"), col("b").as("y"))),
-            Seq("x", "y"), "left_semi")
-          .select(col("m").as("a"), col("x").as("b"), col("y").as("c"))
-        // T3: triangles entirely inside the batch (canonical enumeration)
-        val t3 = d
-          .join(d.select(col("a").as("b"), col("b").as("c")), "b")
-          .join(d.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
-          .select("a", "b", "c")
-        val deltaCounts = t1.unionAll(t2).unionAll(t3)
+        // lands, materialized ONCE (pins every pre-batch chain read ahead
+        // of the delta write; feeds the T1 fan plus both closing probes)
+        val eOld = graft.plans.Materialize(
+          if (cat.exists("T"))
+            cat.load("T").select(col("src").as("a"), col("dst").as("b"))
+          else Seq.empty[(Long, Long)].toDF("a", "b"))
+        val deltaCounts = newTriangles(d, eOld)
           .select(explode(array(col("a"), col("b"), col("c"))).as("vertex"))
           .groupBy("vertex").agg(count(lit(1)).cast("long").as("n_triangles"))
           .localCheckpoint(true) // feeds the total AND the append;
@@ -2774,6 +2722,63 @@ object StreamOps {
       s"triangle maintenance replay ran $batches non-empty micro-batches; " +
         "the incremental path requires at least 2")
     counterState(spark, state, triangleFold, "n_triangles").orderBy("vertex")
+  }
+
+  /** The triangles the canonical (a < b) delta edges `d` complete over
+    * the canonical OLD edge set `eOld`, each exactly once, as (a, b, c)
+    * rows — T1, T2 and T3 of [[triangleMaintainReplayBatch]]. Both inputs
+    * come from [[graft.plans.Materialize]]: within the broadcast threshold
+    * the |Δ| side and the closing-edge probes broadcast, so the O(E)
+    * symmetric adjacency never shuffles (the unsized plan shuffled it
+    * TWICE per batch, fan + closing semi); past it the shuffle shapes
+    * return (100 TB path).
+    */
+  private[graft] def newTriangles(d: DataFrame, eOld: DataFrame): DataFrame = {
+    val symOld = eOld.select(col("a").as("x"), col("b").as("y"))
+      .unionAll(eOld.select(col("b").as("x"), col("a").as("y")))
+    // T1: delta edge (a,b) + old edges (a,c), (b,c) — the closing
+    // {b,c} probe keys the CANONICAL store via least/greatest (the
+    // same edge set a symmetric semi-join encodes, at half the rows)
+    val t1 = d
+      .join(symOld.select(col("x").as("a"), col("y").as("c")), "a")
+      .join(eOld.select(col("a").as("e1"), col("b").as("e2")),
+        col("e1") === least(col("b"), col("c")) &&
+          col("e2") === greatest(col("b"), col("c")), "left_semi")
+      .select("a", "b", "c")
+    // T2: delta wedge (m,x), (m,y) with x < y, closing OLD edge (x,y)
+    val symD = d.select(col("a").as("m"), col("b").as("x"))
+      .unionAll(d.select(col("b").as("m"), col("a").as("x")))
+    val t2 = symD
+      .join(symD.select(col("m"), col("x").as("y")), "m")
+      .filter(col("x") < col("y"))
+      .join(eOld.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"), "left_semi")
+      .select(col("m").as("a"), col("x").as("b"), col("y").as("c"))
+    // T3: triangles entirely inside the batch (canonical enumeration)
+    val t3 = d
+      .join(d.select(col("a").as("b"), col("b").as("c")), "b")
+      .join(d.select(col("a"), col("b").as("c")), Seq("a", "c"), "left_semi")
+      .select("a", "b", "c")
+    t1.unionAll(t2).unionAll(t3)
+  }
+
+  /** Stages `pairs0` for a replay as canonical pairs (a < b) in `splits`
+    * part files under `inDir`, with modification times set one second
+    * apart in file-name order. The file source replays files oldest
+    * first, and files written together carry equal or arbitrary times, so
+    * without this the batch order, and the job train with it, differs
+    * from run to run.
+    */
+  private def stageCanonicalPairs(spark: org.apache.spark.sql.SparkSession,
+                                  pairs0: DataFrame, inDir: String, splits: Int): Unit = {
+    pairs0.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
+      .repartition(splits).write.parquet(inDir)
+    val dir = new org.apache.hadoop.fs.Path(inDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val t0 = System.currentTimeMillis() - 1000L * parts.length
+    parts.zipWithIndex.foreach { case (p, i) => fs.setTimes(p, t0 + 1000L * i, -1L) }
   }
 
   /** Serve-time fold for the triangle twin's append-only counter store
@@ -2834,23 +2839,12 @@ object StreamOps {
     val inDir = s"$tmp/in"
     val state = s"$tmp/state"
     stateDirProbe(state)
-    pairs0.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .repartition(splits).write.parquet(inDir)
+    stageCanonicalPairs(spark, pairs0, inDir, splits)
     val schema = spark.read.parquet(inDir).schema
     val cat = new graft.graph.GraphCatalog(spark, s"$tmp/graphs")
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     var batchesDone = 0L
-    // Additive edge counter for the broadcast gate: replay deltas are
-    // pairwise disjoint by construction, so |post-batch edge set| is the
-    // running sum of delta sizes — an O(|Δ|) count over the batch's
-    // already-checkpointed blocks, replacing the per-batch O(E) scan of
-    // the accumulated chain (`eAll.count()`, r14 verdict #4: one full
-    // chain-count job per micro-batch in a twin whose whole claim is
-    // |Δ|-scaled batches). compact() rewrites the chain but never changes
-    // the count, so the counter stays exact across compactions.
-    var edgesTotal = 0L
     val q = src.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$tmp/ckpt")
@@ -2865,21 +2859,19 @@ object StreamOps {
         def rankOf(a: org.apache.spark.sql.Column,
                    b: org.apache.spark.sql.Column) =
           struct(a.as("r1"), b.as("r2"))
-        val d = batch.select(col("a").cast("long").as("a"),
+        val d = graft.plans.Materialize(batch.select(col("a").cast("long").as("a"),
             col("b").cast("long").as("b"))
-          .withColumn("r", rankOf(col("a"), col("b")))
-          .localCheckpoint(true)
+          .withColumn("r", rankOf(col("a"), col("b"))))
         val eOld =
           if (cat.exists("Q"))
             cat.load("Q").select(col("src").as("a"), col("dst").as("b"))
           else Seq.empty[(Long, Long)].toDF("a", "b")
         // full post-batch edge set with ranks (chain edges rank below
         // every delta edge); materialized so every read of the pre-batch
-        // chain is pinned BEFORE the delta write below
-        val eAll = eOld.withColumn("r", rankOf(lit(-1L), lit(-1L)))
-          .unionByName(d)
-          .localCheckpoint(true)
-        edgesTotal += d.count() // cached blocks: milliseconds, O(|Δ|)
+        // chain is pinned BEFORE the delta write below, and so its
+        // planner size is its real size
+        val eAll = graft.plans.Materialize(eOld.withColumn("r", rankOf(lit(-1L), lit(-1L)))
+          .unionByName(d))
         // Join geometry, sized for the |Δ|·deg candidate fan-out (~1.5e8
         // rows over a full sf0.1 replay): the adjacency EXPANSION (delta
         // endpoint → neighbors) is a cheap shuffle join of two narrow
@@ -2893,84 +2885,50 @@ object StreamOps {
         // broadcast threshold Spark plans the shuffle join — the 100 TB
         // path, where per-batch cost stays |Δ|-scaled but pays the
         // exchange.
-        val eKey = eAll.select(col("a").as("e1"), col("b").as("e2"),
+        val eProbe = eAll.select(col("a").as("e1"), col("b").as("e2"),
           col("r").as("re"))
-        val bcastEdges = edgesTotal <= quadBroadcastMax
-        val eProbe = if (bcastEdges) broadcast(eKey) else eKey
-        // Past the broadcast gate the fan-out below can no longer be
+        // Past the broadcast threshold the fan-out below can no longer be
         // filtered map-side by a BroadcastHashJoin — and shuffling it to
         // be mostly discarded IS the at-scale bottleneck (measured at the
         // 10× soak: the cn stage was 84% of the scaled replay, growing
         // 13→191 s/batch as the graph accrued). So the shuffle path
         // broadcasts what DOES stay small at any scale: a Bloom filter
-        // over the canonical edge key (a few MB, capped at 32 MB — past
-        // the cap the false-positive rate degrades, never the answer),
-        // probed map-side so non-edges die before crossing the exchange.
-        // The exact join still runs on the survivors, so the result is
-        // bit-identical — same contract as RuntimeFilters.bloomSemiJoin.
-        val edgeBloom =
-          if (bcastEdges) None
-          else {
-            spark.conf.set(
-              "spark.sql.optimizer.runtime.bloomFilter.maxNumItems",
-              (1L << 33).toString)
-            spark.conf.set(
-              "spark.sql.optimizer.runtime.bloomFilter.maxNumBits",
-              (1L << 28).toString)
-            val bits = math.max(64L * 8L,
-              math.min(edgesTotal * 8L, 1L << 28))
-            Some(eKey
-              .agg(graft.pipeline.RuntimeFilters.bloomAgg(
-                struct(col("e1"), col("e2")), math.max(edgesTotal, 1L),
-                bits).as("bf"))
-              .localCheckpoint(true)) // built once, probed by cn AND quads
-          }
-        def edgeMight(k1: org.apache.spark.sql.Column,
-                      k2: org.apache.spark.sql.Column) = edgeBloom match {
-          case Some(bf) => coalesce(
-            graft.pipeline.RuntimeFilters.mightContain(bf, struct(k1, k2)),
-            lit(true))
-          case None => lit(true)
-        }
+        // over the canonical edge key, sized from eAll's row count and
+        // built once, probed by cn AND quads so non-edges die before
+        // crossing the exchange (identity within the threshold).
+        val edgePrune = graft.pipeline.RuntimeFilters.bloomPrune(eAll, Seq(col("a"), col("b")))
         val sym = eAll.select(col("a").as("x"), col("b").as("y"), col("r"))
           .unionAll(eAll.select(col("b").as("x"), col("a").as("y"), col("r")))
         // candidates w adjacent to endpoint a, rank-filtered BEFORE the
         // (b, w) probe: every edge of a surviving clique must rank below
         // the attributed delta edge (a, b), so pruning here both halves
         // the fan-out and kills non-max attributions before they cost.
-        // The |Δ| side is broadcast below the gate (r20, guide §3.1 —
-        // same r19 vertexProbe rationale: both sides are checkpointed
-        // LogicalRDDs with no stats, so the unhinted plan shuffled the
-        // O(E) adjacency EVERY batch and re-sorted it against the delta;
-        // the profiled cn stage grew 1.7 → 4.6 s/batch with the accrued
-        // graph. Broadcast-left keeps the adjacency streamed map-side —
-        // the fan-out still never crosses an exchange, now its inputs
-        // don't either). Past the gate the shuffle shape returns: at
-        // 100 TB a batch delta can exceed any executor's memory.
-        val fan = (if (bcastEdges) broadcast(d) else d)
+        // The |Δ| side is materialized, so within the threshold it
+        // broadcasts (r20, guide §3.1: the unsized plan shuffled the O(E)
+        // adjacency EVERY batch and re-sorted it against the delta; the
+        // profiled cn stage grew 1.7 → 4.6 s/batch with the accrued
+        // graph). Broadcast-left keeps the adjacency streamed map-side —
+        // the fan-out never crosses an exchange, nor do its inputs. Past
+        // the threshold the shuffle shape returns: at 100 TB a batch
+        // delta can exceed any executor's memory.
+        val fan = d
           .join(sym.select(col("x").as("a"), col("y").as("w"),
             col("r").as("r1")), "a")
           .filter(col("r1") < col("r"))
         // common neighbors: w must also connect to b — one map-side probe
         // of the canonical edge broadcast (key order via least/greatest)
-        val cn = fan
-          .filter(edgeMight(least(col("b"), col("w")),
-            greatest(col("b"), col("w"))))
-          .join(eProbe, col("e1") === least(col("b"), col("w")) &&
-            col("e2") === greatest(col("b"), col("w")))
-          .filter(col("re") < col("r"))
-          .select("a", "b", "r", "w")
-          .localCheckpoint(true) // feeds both sides of the pair self-join
-        // pair self-join build side: cn is checkpointed, so the row count
-        // is a cached-block sum — broadcast the (a, b, x) side below the
-        // gate (it otherwise shuffles cn TWICE, once per side), shuffle
-        // past it (the fan-out law again)
-        val cnRight = cn.select(col("a"), col("b"), col("w").as("x"))
-        val quads = cn
-          .join(if (cn.count() <= quadBroadcastMax) broadcast(cnRight)
-                else cnRight, Seq("a", "b"))
-          .filter(col("w") < col("x"))
-          .filter(edgeMight(col("w"), col("x")))
+        val cn = graft.plans.Materialize( // feeds both sides of the pair self-join
+          edgePrune(Seq(least(col("b"), col("w")), greatest(col("b"), col("w"))))(fan)
+            .join(eProbe, col("e1") === least(col("b"), col("w")) &&
+              col("e2") === greatest(col("b"), col("w")))
+            .filter(col("re") < col("r"))
+            .select("a", "b", "r", "w"))
+        // pair self-join: within the threshold the (a, b, x) side
+        // broadcasts (it otherwise shuffles cn TWICE, once per side);
+        // past it, it shuffles (the fan-out law again)
+        val quads = edgePrune(Seq(col("w"), col("x")))(cn
+            .join(cn.select(col("a"), col("b"), col("w").as("x")), Seq("a", "b"))
+            .filter(col("w") < col("x")))
           // closing edge (w, x) — canonical because w < x — must also rank
           // below the attributed edge: with the cn-side ranks pre-filtered
           // this completes greatest(r1..r5) < r, so (a, b) is the clique's
@@ -3037,7 +2995,7 @@ object StreamOps {
     *   (2) per-item counts (part → cnt) — same append + fold-on-merge;
     *   (3) the one-row basket total — batches hold disjoint baskets, so
     *       per-batch distinct-basket counts sum exactly in a driver-side
-    *       counter (the K4 twin's `edgesTotal` pattern).
+    *       counter.
     * r20 rework (r19 verdict #3, guide §2.3/§5): the previous per-batch
     * [[mergeAdditiveKeyed]] read + re-aggregated + REWROTE every touched
     * bucket each batch — and a pair-count delta touches essentially every
@@ -3079,8 +3037,7 @@ object StreamOps {
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir)
     // disjoint baskets: the running total is the exact sum of per-batch
-    // distinct-basket counts (same driver-counter argument as the K4
-    // twin's edgesTotal — a compaction never changes it)
+    // distinct-basket counts (a compaction never changes it)
     var basketsTotal = 0L
     val pairFold: DataFrame => DataFrame =
       _.groupBy("ante", "cons").agg(sum("n_ab").cast("long").as("n_ab"))

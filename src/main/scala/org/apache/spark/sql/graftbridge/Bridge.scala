@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 made these conversions
   * `private[sql]` (Column now wraps a ColumnNode); exposing them from a
@@ -23,4 +26,20 @@ object Bridge {
   : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `checkpoint` (the result of `localCheckpoint`) re-planned over the
+    * same RDD with `rows` rows as its statistics, sized by the planner's
+    * per-row width of its columns. A checkpoint otherwise carries the
+    * size estimate of the plan it replaced, which after a join is far
+    * off.
+    */
+  def withRowCount(checkpoint: DataFrame, rows: Long): DataFrame = {
+    val session = checkpoint.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val lr = checkpoint.queryExecution.logical match {
+      case lr: LogicalRDD => lr
+      case p => throw new IllegalArgumentException(s"not a checkpoint: ${p.nodeName}")
+    }
+    val stats = Statistics(EstimationUtils.getSizePerRow(lr.output) * rows, Some(BigInt(rows)))
+    ofRows(session, lr.copy()(session, Some(stats), Some(lr.constraints)))
+  }
 }

@@ -241,10 +241,9 @@ class GraphOpsSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val bQuad = quad(GraphOps.fourCliqueCounts(p))
     val bTri = quad(GraphOps.triangleCounts(p))
-    // graft.censusBroadcastMax=0 forces the past-the-gate (shuffled)
-    // geometry on the same graph — strategy only, identical relation
-    System.setProperty("graft.censusBroadcastMax", "0")
-    try {
+    // threshold -1 forces the past-the-gate (shuffled) geometry on the
+    // same graph — strategy only, identical relation
+    withBroadcastThreshold(-1) {
       assert(quad(GraphOps.fourCliqueCounts(p)) == bQuad,
         "shuffled-path K4 census diverged from the broadcast path")
       assert(quad(GraphOps.triangleCounts(p)) == bTri,
@@ -258,7 +257,7 @@ class GraphOpsSpec extends AnyFunSuite {
         s"above-gate census plan carries no Bloom prune:\n$forced")
       assert(forced.indexOf("might_contain") > forced.indexOf("LeftSemi"),
         s"Bloom prune is not below the closing semi-join:\n$forced")
-    } finally System.clearProperty("graft.censusBroadcastMax")
+    }
     // under the gate the closing-edge probe must be a map-side broadcast:
     // the O(m^1.5) wedge fan-out crosses no exchange before aggregation
     val plan = GraphOps.triangleCounts(p).queryExecution.executedPlan.toString
@@ -279,13 +278,10 @@ class GraphOpsSpec extends AnyFunSuite {
           .collect().toSeq,
         GraphOps.communityConductance(g, lpa).collect().toSeq)
     }
-    val on = snap() // tiny graph: gate passes, probes broadcast
-    System.setProperty("graft.vertexBroadcastMax", "0") // force shuffled path
-    try {
-      val off = snap()
-      assert(on == off,
-        s"vertex-probe gate changed results:\nON  $on\nOFF $off")
-    } finally System.clearProperty("graft.vertexBroadcastMax")
+    val on = snap() // tiny graph: within the threshold, probes broadcast
+    val off = withBroadcastThreshold(-1)(snap()) // force shuffled path
+    assert(on == off,
+      s"vertex-probe gate changed results:\nON  $on\nOFF $off")
   }
 
   test("vertex-probe gate: MIS and maximal matching agree bit-for-bit across the gate") {
@@ -298,9 +294,8 @@ class GraphOpsSpec extends AnyFunSuite {
       GraphOps.maximalIndependentSet(p).collect().toSeq,
       GraphOps.maximalMatching(p).collect().toSeq)
     val on = snap()
-    System.setProperty("graft.vertexBroadcastMax", "0")
-    try assert(snap() == on, "MIS/matching diverged across the vertex-probe gate")
-    finally System.clearProperty("graft.vertexBroadcastMax")
+    assert(withBroadcastThreshold(-1)(snap()) == on,
+      "MIS/matching diverged across the vertex-probe gate")
   }
 
   test("kCoreBounded peels the pendant vertex, keeps the triangle") {

@@ -207,20 +207,24 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, concat_ws, lit}
     val p0 = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("a", "b")
-    val und = p0.select(col("a").as("v")).unionAll(p0.select(col("b").as("v")))
-      .distinct()
+    val und = graft.plans.Materialize(p0.select(col("a").as("v"))
+      .unionAll(p0.select(col("b").as("v"))).distinct()
       .withColumn("h", graft.functions.PortableHash.md5Bits60(
-        concat_ws("_", lit("mis"), col("v"))))
-      .localCheckpoint(true)
+        concat_ws("_", lit("mis"), col("v")))))
     val edges = p0.select(col("a").as("v"), col("b").as("u"))
       .unionAll(p0.select(col("b").as("v"), col("a").as("u")))
       .localCheckpoint(true)
-    val pw = graph.GraphOps.misWinners(und, edges)
+    val pb = graph.GraphOps.misBlocked(und, edges)
       .queryExecution.executedPlan.toString
-    assert(pw.contains("LeftAnti"), s"winners not an anti-join against blocked in:\n$pw")
-    assert(!pw.contains("CartesianProduct") && !pw.contains("BroadcastNestedLoop"),
-      s"cartesian in the MIS blocked-join:\n$pw")
-    assert(!pw.contains("Window"), s"window in the MIS round body:\n$pw")
+    assert(!pb.contains("CartesianProduct") && !pb.contains("BroadcastNestedLoop"),
+      s"cartesian in the MIS blocked-join:\n$pb")
+    assert(!pb.contains("Window"), s"window in the MIS round body:\n$pb")
+    // the materialized blocked set is sized, so the winners' anti-join
+    // broadcasts it within the threshold and shuffles at -1
+    val blocked = graft.plans.Materialize(graph.GraphOps.misBlocked(und, edges))
+    assertSizedJoin("MIS winners anti-join") {
+      joinLine(graph.GraphOps.misWinners(und, blocked))(_.contains("LeftAnti"))
+    }
     val pe = graph.GraphOps.misShrinkEdges(edges, und)
       .queryExecution.executedPlan.toString
     val semis = pe.linesIterator.count(_.contains("LeftSemi"))
@@ -594,5 +598,78 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("vector_dist2"), s"native distance missing in:\n$p")
     assert(p.contains("HashAggregate") || p.contains("SortAggregate"),
       s"argmax not an aggregate in:\n$p")
+  }
+
+  /** The physical join line of `df`'s plan that `pick` selects. */
+  private def joinLine(df: => org.apache.spark.sql.DataFrame)(pick: String => Boolean): String = {
+    val p = df.queryExecution.executedPlan.toString
+    p.linesIterator.find(l => l.contains("Join") && pick(l))
+      .getOrElse(fail(s"no such join in:\n$p"))
+  }
+
+  /** `join` plans a BroadcastHashJoin within the default threshold and a
+    * SortMergeJoin at threshold -1.
+    */
+  private def assertSizedJoin(what: String)(join: => String): Unit = {
+    val within = join
+    assert(within.contains("BroadcastHashJoin"), s"$what not broadcast within the threshold: $within")
+    val forced = withBroadcastThreshold(-1)(join)
+    assert(forced.contains("SortMergeJoin"), s"$what not shuffled at threshold -1: $forced")
+  }
+
+  test("Materialize: exact row count from the checkpoint's own job, real planner size, RDD kept") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.plans.Materialize
+    val a = (1L to 300L).toDF("k")
+    val x = a.join(a.select(col("k").as("k2")), col("k") === col("k2"))
+    val bare = jobsIn("materialize-bare")(x.localCheckpoint(true))
+    var m: org.apache.spark.sql.DataFrame = null
+    val observed = jobsIn("materialize-observed") { m = Materialize(x) }
+    assert(observed == bare, s"Materialize ran $observed jobs, a bare checkpoint $bare")
+    assert(Materialize.rowCount(m) == 300L && m.count() == 300L)
+    // a bare checkpoint keeps the join's estimate; Materialize's is rows × width
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    assert(x.localCheckpoint(true).queryExecution.optimizedPlan.stats.sizeInBytes > limit)
+    assert(m.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(300L * 24L))
+    assert(Materialize.small(m) && !withBroadcastThreshold(-1)(Materialize.small(m)))
+    // ownedGraphResult's keep-set: the frame still reads the checkpoint's
+    // persisted RDD
+    val ids = m.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+  }
+
+  test("census closing probe: BroadcastHashJoin within the broadcast threshold, SortMergeJoin at -1") {
+    import spark.implicits._
+    val p = ((for { a <- 1L to 4L; b <- a + 1 to 4L } yield (a, b)) ++
+      Seq((4L, 5L), (4L, 6L), (5L, 6L))).toDF("a", "b")
+    assertSizedJoin("census closing probe") {
+      joinLine(graph.GraphOps.triangleCounts(p))(_.contains("LeftSemi"))
+    }
+  }
+
+  test("LPA round: the label join is a BroadcastHashJoin within the threshold, SortMergeJoin at -1") {
+    import org.apache.spark.sql.functions.col
+    val e = undirected((1, 2), (2, 3), (1, 3), (3, 4)).localCheckpoint(true)
+    val lab = graft.plans.Materialize(e.select(col("src").as("vertex")).distinct()
+      .withColumn("label", col("vertex")))
+    assertSizedJoin("LPA label join") {
+      joinLine(graph.GraphOps.lpaRound(e, lab))(_.contains("Inner"))
+    }
+  }
+
+  test("triangle twin: the T1 closing probe is a BroadcastHashJoin within the threshold, SortMergeJoin at -1") {
+    import spark.implicits._
+    val d = graft.plans.Materialize(Seq((1L, 2L), (2L, 4L)).toDF("a", "b"))
+    val eOld = graft.plans.Materialize(Seq((1L, 3L), (2L, 3L), (3L, 4L)).toDF("a", "b"))
+    assertSizedJoin("T1 closing probe") {
+      joinLine(streaming.StreamOps.newTriangles(d, eOld))(l =>
+        l.contains("LeftSemi") && l.contains("least("))
+    }
+    val rows = streaming.StreamOps.newTriangles(d, eOld).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(rows == Set((1L, 2L, 3L), (2L, 4L, 3L)), s"new triangles $rows")
   }
 }

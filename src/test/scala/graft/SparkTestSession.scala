@@ -33,6 +33,16 @@ object SparkTestSession {
     (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
   }
 
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`
+    * (-1 forces every shuffled join shape), restored afterwards.
+    */
+  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** Spark jobs `body` ran, counted by job tag through the status
     * tracker. A tag, unlike a job group, reaches the jobs of streaming
     * queries `body` starts: their execution thread inherits the caller's

@@ -416,38 +416,57 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("fourcliqueMaintainReplayBatch: Bloom-pruned shuffle path equals the broadcast path") {
-    // graft.quadBroadcastMax=0 forces the past-the-gate geometry (shuffled
-    // existence probes pre-pruned by the broadcast edge Bloom) on the same
-    // hand graph — the Bloom only ever shrinks the exact join's input, so
+    // threshold -1 forces the past-the-gate geometry (shuffled existence
+    // probes pre-pruned by the broadcast edge Bloom) on the same hand
+    // graph — the Bloom only ever shrinks the exact join's input, so
     // every count must match the broadcast-path census bit-for-bit
     val pairs = ((for { a <- 1L to 5L; b <- a + 1 to 5L } yield (a, b)) ++
       Seq((4L, 6L), (4L, 7L), (5L, 6L), (5L, 7L), (6L, 7L),
         (7L, 8L), (8L, 9L))).toDF("a", "b")
-    System.setProperty("graft.quadBroadcastMax", "0")
-    try {
-      val got = StreamOps.fourcliqueMaintainReplayBatch(spark, pairs)
+    val batch = graft.graph.GraphOps.fourCliqueCounts(pairs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = withBroadcastThreshold(-1) {
+      StreamOps.fourcliqueMaintainReplayBatch(spark, pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val batch = graft.graph.GraphOps.fourCliqueCounts(pairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == batch, s"Bloom-path end state $got != batch census $batch")
-    } finally System.clearProperty("graft.quadBroadcastMax")
+    }
+    assert(got == batch, s"Bloom-path end state $got != batch census $batch")
+  }
+
+  test("fourcliqueMaintainReplayBatch: the Bloom path leaves the runtime Bloom filter confs as they were") {
+    // the edge Bloom is sized within the session's maxNumItems/maxNumBits;
+    // writing those confs would make later census sizing depend on which
+    // query ran first
+    val pairs = (for { a <- 1L to 5L; b <- a + 1 to 5L } yield (a, b)).toDF("a", "b")
+    val keys = Seq("maxNumItems", "maxNumBits")
+      .map(k => s"spark.sql.optimizer.runtime.bloomFilter.$k")
+    val before = keys.map(spark.conf.get)
+    val got = withBroadcastThreshold(-1) {
+      StreamOps.fourcliqueMaintainReplayBatch(spark, pairs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
+    assert(got == (1L to 5L).map(_ -> 4L).toMap, s"K5 census off: $got")
+    assert(keys.map(spark.conf.get) == before, "the replay changed the Bloom filter confs")
   }
 
   test("mergeMapCC: driver union-find equals the distributed kernel bit-for-bit") {
     // two chains that fuse through a shared spine + an isolated pair —
     // exercises multi-hop unions, out-of-order arrivals, and min-id
     // labels across both paths
-    val e = Seq((5L, 3L), (3L, 9L), (9L, 2L), (14L, 15L), (15L, 2L),
+    val edges = Seq((5L, 3L), (3L, 9L), (9L, 2L), (14L, 15L), (15L, 2L),
         (40L, 41L), (100L, 7L), (7L, 6L))
-      .toDF("src", "dst").localCheckpoint(true)
-    val local = StreamOps.mergeMapCC(spark, e)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    System.setProperty("graft.localCcMax", "0") // force the GraphX path
-    try {
-      val dist = StreamOps.mergeMapCC(spark, e)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(local == dist, s"local $local != distributed $dist")
-    } finally System.clearProperty("graft.localCcMax")
+      .toDF("src", "dst")
+    val e = graft.plans.Materialize(edges)
+    def isLocal(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val localDf = StreamOps.mergeMapCC(spark, e)
+    assert(isLocal(localDf), "within the threshold the merge map is computed on the driver")
+    val local = localDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val dist = withBroadcastThreshold(-1) { // force the GraphX path
+      val df = StreamOps.mergeMapCC(spark, e)
+      assert(!isLocal(df), "at threshold -1 the merge map runs the GraphX kernel")
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    assert(local == dist, s"local $local != distributed $dist")
     // min-id labels: the fused chain {2,3,5,9,14,15} labels 2
     assert(local.contains((5L, 2L)) && local.contains((14L, 2L)) &&
       local.contains((40L, 40L)) && local.contains((41L, 40L)))
@@ -517,6 +536,9 @@ class StreamSpec extends AnyFunSuite {
       s"streamed estimate ${got.toSeq} != batch ${batch.toSeq}")
   }
 
+  /** Jobs of the bare K9 triangle replay below. */
+  private val TriangleReplayJobs = 113
+
   test("serve twins do no probe-only work without a probe: hll and triangle replays run fewer jobs") {
     // a probe's arguments (counts, state folds) are built only when a
     // caller passes one, so the bare replay launches strictly fewer jobs
@@ -529,19 +551,20 @@ class StreamSpec extends AnyFunSuite {
     val hllBare = jobsIn("hll-bare")(hll(None))
     val hllProbed = jobsIn("hll-probed")(hll(Some((_, _) => ())))
     // K9 over 8 micro-batches: the probed replay folds the state once per
-    // batch after the first append. The batch order follows file mtimes,
-    // so whether an early batch completes a triangle (and appends) varies
-    // by a few jobs between runs; three runs per side are summed.
+    // batch after the first append. Staging orders the batches by file
+    // name, so the bare replay's job train is the same on every run: an
+    // exact budget, with no job spent sizing a join
     val pairs = (for { a <- 1L to 9L; b <- a + 1 to 9L } yield (a, b)).toDF("a", "b")
     def tri(probe: Option[(Long, org.apache.spark.sql.DataFrame) => Unit]): Unit = {
       StreamOps.triangleMaintainReplayBatch(spark, pairs, batchProbe = probe, splits = 8)
         .collect(); ()
     }
-    val triBare = (1 to 3).map(i => jobsIn(s"tri-bare-$i")(tri(None)))
-    val triProbed = (1 to 3).map(i => jobsIn(s"tri-probed-$i")(tri(Some((_, _) => ()))))
+    val triBare = jobsIn("tri-bare")(tri(None))
+    val triProbed = jobsIn("tri-probed")(tri(Some((_, _) => ())))
     info(s"jobs bare/probed: hll $hllBare/$hllProbed, triangle $triBare/$triProbed")
     assert(hllBare < hllProbed, s"hll jobs: bare $hllBare vs probed $hllProbed")
-    assert(triBare.sum < triProbed.sum, s"triangle jobs: bare $triBare vs probed $triProbed")
+    assert(triBare == TriangleReplayJobs, s"triangle bare replay ran $triBare jobs")
+    assert(triBare < triProbed, s"triangle jobs: bare $triBare vs probed $triProbed")
   }
 
   test("triangleMaintainReplayBatch: non-canonical pair orientation gives the canonical input's rows") {
